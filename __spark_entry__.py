@@ -94,47 +94,6 @@ def q_msg_byte_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _parsed(spark, sf_dir).select("doc_id", "msg")
 
 
-def _parsed_jvm(spark: SparkSession, sf_dir: str,
-                corrupt: bool = False) -> DataFrame:
-    """Same lines, parsed by the Tungsten fast path (sparklog/jparse.py):
-    eligible rows never cross into Python; fallback rows reuse the exact
-    Python path. Staged through parquet first — the shape every real
-    deployment has (lines come from storage, not a fused synthesis
-    projection whose combined stage would blow codegen's 64 KB method
-    limit into interpreted fallback; measured, documented in jparse)."""
-    import tempfile
-
-    from sparklog.jparse import parse_df_jvm
-
-    _ensure_shipped(spark)
-    stage = tempfile.mkdtemp(prefix="sparklog_jvm_lines_")
-    synth.lines_df(spark, sf_dir, corrupt=corrupt).write.mode(
-        "overwrite").parquet(stage)
-    return parse_df_jvm(spark.read.parquet(stage))
-
-
-def q_parse_fields_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """parse_fields through the JVM fast path — the driver proves the
-    Tungsten parser field-identical against the SAME DuckDB oracle."""
-    return _parsed_jvm(spark, sf_dir).select(
-        "doc_id", "severity", "facility", "version", "timestamp",
-        "timestamp_nanos", "hostname", "appname", "procid_pid",
-        "procid_name", "msgid",
-    )
-
-
-def q_msg_byte_identity_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MSG byte-identity through the JVM fast path."""
-    return _parsed_jvm(spark, sf_dir).select("doc_id", "msg")
-
-
-def q_rejects_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Errors-as-data through the JVM fast path: corrupt rows must fall
-    back to the Python path and carry the exact error variants."""
-    return _parsed_jvm(spark, sf_dir, corrupt=True).select(
-        "doc_id", "parse_error")
-
-
 def q_sd_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """StructuredData semantics: find_tuple lookups, duplicate-SD-ID merge,
     escape handling, SD-ID count (message.rs:113-143)."""
@@ -1136,9 +1095,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "parse_fields": q_parse_fields,
         "msg_byte_identity": q_msg_byte_identity,
-        "parse_fields_jvm": q_parse_fields_jvm,
-        "msg_byte_identity_jvm": q_msg_byte_identity_jvm,
-        "rejects_jvm": q_rejects_jvm,
         "sd_lookup": q_sd_lookup,
         "enrich_names": q_enrich_names,
         "hourly_agg": q_hourly_agg,
@@ -2130,9 +2086,4 @@ def oracle_sql() -> dict[str, str]:
     # per-group and single-pass grok must produce IDENTICAL output
     out["grok_line"] = _grok_line_oracle()
     out["grok_line_sp"] = out["grok_line"]
-    # the Tungsten fast-path parser must be byte-identical to the Python
-    # path on every axis the driver checks — same oracles, new rows
-    out["parse_fields_jvm"] = out["parse_fields"]
-    out["msg_byte_identity_jvm"] = out["msg_byte_identity"]
-    out["rejects_jvm"] = out["rejects"]
     return out

@@ -118,10 +118,7 @@ def run_bench(cpus: int, sf_dir: str, target_rows: int = 2_000_000,
         from sparklog import ann, textops
         from sparklog.synth import load_documents
 
-        from sparklog.jparse import parse_df_jvm
-
         parsed = parse_df(lines)
-        parsed_jvm = parse_df_jvm(lines)
         docs = load_documents(spark, sf_dir)
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
@@ -139,12 +136,6 @@ def run_bench(cpus: int, sf_dir: str, target_rows: int = 2_000_000,
 
         legs = [
             ("parse_count", lambda: parsed.agg(
-                F.sum(F.when(F.col("parse_error").isNull(), 1).otherwise(0))
-            ).collect()),
-            # labeled A/B twin: the Tungsten fast-path parser
-            # (sparklog/jparse.py). Parity driver-gated; this leg records
-            # the throughput comparison each round.
-            ("parse_count_jvm", lambda: parsed_jvm.agg(
                 F.sum(F.when(F.col("parse_error").isNull(), 1).otherwise(0))
             ).collect()),
             ("parse_enrich_agg", e2e),

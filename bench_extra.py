@@ -49,7 +49,6 @@ def main():
     import bench
     from sparklog import ann, textops
     from sparklog import pipeline as PL
-    from sparklog.jparse import parse_df_jvm
     from sparklog.synth import load_documents
     from sparklog.udf import parse_df
 
@@ -59,7 +58,6 @@ def main():
         lines, n_rows = bench._replicated_lines(
             spark, sf_dir, 2_000_000, cpus, stage_dir)
         parsed = parse_df(lines)
-        parsed_jvm = parse_df_jvm(lines)
         docs = load_documents(spark, sf_dir)
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
@@ -82,9 +80,6 @@ def main():
         )
         legs = {
             "parse_count": lambda: parsed.agg(
-                F.sum(F.when(F.col("parse_error").isNull(), 1).otherwise(0))
-            ).collect(),
-            "parse_count_jvm": lambda: parsed_jvm.agg(
                 F.sum(F.when(F.col("parse_error").isNull(), 1).otherwise(0))
             ).collect(),
             "parse_enrich_agg": e2e,
@@ -116,7 +111,6 @@ def main():
         }
         frames = {
             "parse_count": lambda: parsed,
-            "parse_count_jvm": lambda: parsed_jvm,
             "parse_enrich_agg": lambda: PL.hourly_agg(
                 PL.enrich(PL.split_rejects(parse_df(lines))[0], spark)),
             "minhash_neardup": lambda: textops.minhash_neardup(docs),

@@ -11,7 +11,7 @@ scan is PARTITION-PRUNED to that day's files (never rescans completed
 days on resume).
 
 Per chunk (SURVEY.md §2D): pruned scan -> synth -> tag lineage -> parse
-(vectorized UDF) -> enrich (broadcast joins) -> salted route write
+(vectorized UDF) -> enrich (join-free projections) -> salted route write
 (per-severity sinks + rejects) -> hourly agg -> metrics -> ATOMIC manifest
 commit. Re-running after a crash processes only pending days.
 """

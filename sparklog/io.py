@@ -85,8 +85,11 @@ def read_syslog_json(spark: SparkSession, path: str, line_field: str = "raw",
         # EVERY line malformed: Spark disallows referencing only the
         # internal corrupt-record column of a raw JSON scan
         # (AnalysisException), so re-read as plain text — the corrupt
-        # column would have carried exactly the raw line anyway
-        return spark.read.text(path).select(
+        # column would have carried exactly the raw line anyway. Blank
+        # (space/tab-only) lines are dropped, as the JSON scan drops them
+        return spark.read.text(path).filter(
+            F.col("value").rlike("[^ \\t]")
+        ).select(
             F.lit(None).cast("long").alias("doc_id"),
             F.col("value").alias("line"),
         )

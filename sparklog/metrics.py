@@ -1,9 +1,9 @@
 """Per-partition lineage + metrics (north-rule stage D10).
 
-``with_metrics`` wraps any line-bearing DataFrame stage in a mapInPandas
-pass that tags every row with its input partition and, as a side product,
-lets ``collect_partition_metrics`` aggregate per-partition counters:
-(partition_id, rows_in, rows_ok, rows_rejected, bytes_in, wall_ms).
+``udf.parse_df(..., tag_lineage=True)`` tags every row with its input
+partition and line byte count inside the parse's own Arrow pass;
+``partition_metrics`` aggregates those tagged rows into per-partition
+counters: (partition_id, rows_in, rows_ok, rows_rejected, bytes_in).
 
 The counters are computed from the tagged rows themselves (one groupBy),
 so they are exact under retries/speculation — a re-run partition simply
@@ -14,39 +14,8 @@ is queryable and joins back to the checkpoint manifest.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def tag_partitions(df: DataFrame, line_col: str = "line") -> DataFrame:
-    """Add (partition_id, bytes_in) lineage columns via one Arrow pass."""
-    schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("partition_id", T.IntegerType()),
-            T.StructField("bytes_in", T.LongType()),
-        ]
-    )
-
-    def tag(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["partition_id"] = pid
-            pdf["bytes_in"] = (
-                pdf[line_col].fillna("").str.encode("utf-8").str.len().astype("int64")
-                if line_col in pdf.columns
-                else 0
-            )
-            yield pdf
-
-    return df.mapInPandas(tag, schema)
 
 
 def partition_metrics(parsed_tagged: DataFrame) -> DataFrame:

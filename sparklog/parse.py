@@ -112,8 +112,11 @@ _FRAC_SCALE = [None] + [10 ** (9 - k) for k in range(1, 10)]
 
 # (year_str, month, day) -> epoch days, for VALID dates only (invalid
 # dates never enter, so the validation branch still runs for them).
-# Bounded by the distinct dates a worker sees (thousands, not rows).
+# Real logs touch thousands of distinct dates, but a Python worker lives
+# across tasks, so adversarial input could grow it without limit: a miss
+# that finds it full clears it first (hits never pay for the bound).
 _YMD_DAYS_CACHE: dict = {}
+_YMD_DAYS_CACHE_MAX = 100_000
 
 
 def _is_leap(y):
@@ -525,6 +528,8 @@ def parse_lines(lines: pd.Series) -> pd.DataFrame:
                             row = _parse_slow(s)
                             break
                         days = int(_days_from_civil(int(y), mo, d))
+                        if len(ymd_days) >= _YMD_DAYS_CACHE_MAX:
+                            ymd_days.clear()
                         ymd_days[(y, mo, d)] = days
                     if h > 23 or mi > 59 or sec > 59:
                         row = _parse_slow(s)

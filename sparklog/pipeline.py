@@ -1,8 +1,8 @@
 """Pipeline operators: enrich -> route -> aggregate (north-rule stages D4-D8).
 
 Scale posture (SURVEY.md §2D):
-  - enrich: broadcast hash joins against 24/8/9-row lookup dims — zero
-    shuffle, the build side replicates to every executor.
+  - enrich: pure projections over the closed 24/8/9-value facility/
+    severity/lang domains (array index / CASE) — no join, no shuffle.
   - route: ONE pass, shuffle-free fan-out via dynamic-partitioned write on
     severity_name (8 sinks + 1 rejects sink).
   - skew: hostname/lang are Zipf-skewed; the salted repartition spreads hot
@@ -21,26 +21,6 @@ from sparklog.schema import FACILITY_NAMES, LANG_NAMES, SEVERITY_NAMES
 SALT_BUCKETS = 16
 
 
-# --- lookup dims (FIXTURES.md §4; facility.rs:87-114, severity.rs:57-68) ---
-
-def facility_lookup(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        list(enumerate(FACILITY_NAMES)), "facility INT, facility_name STRING"
-    )
-
-
-def severity_lookup(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        list(enumerate(SEVERITY_NAMES)), "severity INT, severity_name STRING"
-    )
-
-
-def lang_lookup(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        list(LANG_NAMES.items()), "lang_code STRING, lang_name STRING"
-    )
-
-
 # --- stages -----------------------------------------------------------------
 
 def split_rejects(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -57,21 +37,9 @@ def sd_value(col: str, sd_id: str, param: str) -> F.Column:
     return F.col(col).getItem(sd_id).getItem(param)
 
 
-def sd_element(col: str, sd_id: str) -> F.Column:
-    """All params of one SD-ID (StructuredData::find_sdid, message.rs:131-133)."""
-    return F.col(col).getItem(sd_id)
-
-
 def sd_len(col: str = "sd") -> F.Column:
     """Count of distinct SD-IDs (StructuredData::len, message.rs:136-143)."""
     return F.size(F.col(col))
-
-
-def procid_order() -> list[F.Column]:
-    """ORDER BY analog of ProcId::partial_cmp (message.rs:31-39): PIDs
-    compare among PIDs, Names among Names; the cross-variant
-    incomparability has no SQL analog (documented divergence)."""
-    return [F.col("procid_pid"), F.col("procid_name")]
 
 
 def enrich(parsed: DataFrame, spark: SparkSession,
@@ -102,13 +70,6 @@ def enrich(parsed: DataFrame, spark: SparkSession,
         cols = [c for c in out.columns if c != "lang_code"]
         out = out.select("lang_code", *cols, lang_name.alias("lang_name"))
     return out
-
-
-def with_event_ts(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
-    """Derive event_ts TIMESTAMP (µs) alongside the exact unix-seconds +
-    nanos columns (SURVEY.md §1.1: Spark TIMESTAMP cannot hold the nanos,
-    so the BIGINT/INT pair stays authoritative)."""
-    return df.withColumn("event_ts", F.timestamp_seconds(F.col(ts_col)))
 
 
 def hour_epoch(ts_col: str = "timestamp") -> F.Column:

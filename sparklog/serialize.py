@@ -75,10 +75,6 @@ def to_json_udf(p: pd.DataFrame) -> pd.Series:
                      index=p.index)
 
 
-def with_json(parsed: DataFrame, out_col: str = "json") -> DataFrame:
-    return parsed.withColumn(out_col, json_col(parsed))
-
-
 def _jstr(col_sql: str) -> str:
     """JSON-encode one STRING expression JVM-side, nulls kept.
 

@@ -67,19 +67,24 @@ def materialized_filter(df: DataFrame, cond: F.Column) -> DataFrame:
     condition — and FilterExec codegen performs no subexpression
     elimination, so every reference re-runs its whole defining
     expression per row (measured r6: clean_corpus_full's gate filter
-    held the 3-pass PII scrub chain 22x in ONE Filter node; the jparse
-    route filter held split(line) 17x). Computing the predicate as a
-    column whose definition carries an always-true NON-DETERMINISTIC
-    conjunct (monotonically_increasing_id() is non-negative by
-    construction) pins it above its defining projection — the
+    held the 3-pass PII scrub chain 22x in ONE Filter node). Computing
+    the predicate as a column whose definition carries an always-true
+    NON-DETERMINISTIC conjunct (monotonically_increasing_id() is
+    non-negative by construction) pins it above its defining projection — the
     optimization-guide §4.4 trick — so the heavy columns are
     materialized once and the filter reads them as bound references.
     Row set is unchanged on any input, including under task retries
-    (the conjunct is constant-true regardless of the id drawn)."""
+    (the conjunct is constant-true regardless of the id drawn). The
+    predicate column's name is chosen to differ from every input column
+    (case-insensitively), so no caller column is replaced or dropped."""
+    keep = "__materialized_keep"
+    taken = {c.lower() for c in df.columns}
+    while keep in taken:
+        keep += "_"
     d = df.withColumn(
-        "_keep", cond & (F.monotonically_increasing_id() >= F.lit(0))
+        keep, cond & (F.monotonically_increasing_id() >= F.lit(0))
     )
-    return d.filter(F.col("_keep")).drop("_keep")
+    return d.filter(F.col(keep)).drop(keep)
 
 
 # GPT-2-style pre-tokenizer approximation: contractions, letter runs,

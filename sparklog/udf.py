@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparklog.parse import parse_lines
-from sparklog.schema import PARSED_COLUMNS, PARSED_SCHEMA
+from sparklog.schema import PARSED_SCHEMA
 
 
 @F.pandas_udf(PARSED_SCHEMA)
@@ -43,8 +43,7 @@ def parse_df(df: DataFrame, line_col: str = "line",
     Output: passthrough columns + the 13 PARSED_COLUMNS, flattened; with
     tag_lineage=True also (partition_id, bytes_in) — fused into the SAME
     Arrow pass, so the lineage-tagged pipeline still crosses into Python
-    exactly once (a separate tag_partitions pass costs a second full
-    Arrow round-trip of every line).
+    exactly once.
 
     Uses mapInPandas rather than a struct-returning pandas UDF: Catalyst
     pushes downstream filters (e.g. the reject split) through a Project of

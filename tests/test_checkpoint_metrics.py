@@ -7,8 +7,6 @@ import os
 import subprocess
 import sys
 
-from pyspark.sql import functions as F
-
 from sparklog import checkpoint as CK
 from sparklog import metrics as M
 from sparklog import synth
@@ -33,8 +31,7 @@ def test_manifest_atomic_roundtrip(tmp_path):
 
 def test_partition_metrics_conservation(spark):
     lines = synth.lines_df(spark, SF_SMOKE, corrupt=True).repartition(4)
-    tagged = M.tag_partitions(lines)
-    parsed = parse_df(tagged)
+    parsed = parse_df(lines, tag_lineage=True)
     mx = M.partition_metrics(parsed).collect()
     assert len(mx) == 4
     total_in = sum(r["rows_in"] for r in mx)

@@ -30,10 +30,8 @@ RISKY = [
     "clean_corpus_full",
     "repetition",
     "profile",
-    # r5 additions: shingle-count membership join and the dual-branch
-    # (union) JVM parse route must not depend on partitioning either
+    # the shingle-count membership join must not depend on partitioning
     "dup_passages",
-    "parse_fields_jvm",
     "line_dedup",
 ]
 

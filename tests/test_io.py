@@ -181,10 +181,11 @@ def test_json_envelope_every_line_malformed(spark, tmp_path):
     """When EVERY envelope line is malformed the inferred schema holds
     only the corrupt column, which a raw JSON scan cannot reference
     alone (AnalysisException) — the reader must fall back to a text
-    read and still surface every raw line as errors-as-data."""
+    read and still surface every raw line as errors-as-data. Blank
+    lines are skipped, as the JSON scan skips them."""
     p = tmp_path / "env_bad"
     p.mkdir()
-    (p / "a.jsonl").write_text("not json\nalso { not json\n")
+    (p / "a.jsonl").write_text("not json\n\n \t\nalso { not json\n")
     rows = sorted(IO.read_syslog_json(spark, str(p)).collect(),
                   key=lambda r: r["line"])
     assert [(r["doc_id"], r["line"]) for r in rows] == \

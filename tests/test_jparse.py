@@ -1,25 +1,17 @@
-"""JVM fast-path parser: byte-identical parity with the Python path.
+"""Golden corpus through the lineage-tagged parse, read back on the JVM side.
 
-The contract of sparklog/jparse.py is exact equivalence with
-sparklog/udf.py:parse_df on EVERY input — eligible rows parse in
-Tungsten, everything else falls back to the unchanged Python path, so
-any divergence is a fast-path bug. Four parity angles: the reference's
-golden corpus, the synth corpus with all SD classes + corruption, a
-hand-built tricky set (escapes, dup merges, pid edge cases, message
-newlines), and a seeded mutation fuzz."""
+`parse_df(..., tag_lineage=True)` is the variant the checkpointed and
+chunked pipelines use: the same Arrow pass also emits (partition_id,
+bytes_in). Here its rows cross a Tungsten exchange before they are
+collected, so every parsed field must survive the JVM row format as
+well as the Arrow boundary, and the lineage columns must be exact."""
 
 from __future__ import annotations
 
-import random
-
 import pytest
-from pyspark.sql import functions as F
 
-from sparklog import synth
-from sparklog.jparse import ELIGIBLE_RE, parse_df_jvm
 from sparklog.udf import parse_df
 
-from conftest import SF_SMOKE
 from golden_corpus import GOLDEN
 from test_parser_pandas import _check
 
@@ -29,138 +21,14 @@ def jvm_rows(spark):
     df = spark.createDataFrame(
         [(g[0], g[1]) for g in GOLDEN], ["name", "line"]
     )
-    out = parse_df_jvm(df, "line")
+    out = parse_df(df, "line", tag_lineage=True).repartition(3, "name")
     return {r["name"]: r.asDict() for r in out.collect()}
 
 
 @pytest.mark.parametrize("name,line,expected", GOLDEN,
                          ids=[g[0] for g in GOLDEN])
 def test_golden_through_jvm_path(jvm_rows, name, line, expected):
-    _check(name, expected, jvm_rows[name])
-
-
-def _assert_full_parity(df):
-    a = {r["doc_id"]: r.asDict() for r in parse_df(df).collect()}
-    b = {r["doc_id"]: r.asDict() for r in parse_df_jvm(df).collect()}
-    assert set(a) == set(b)
-    diffs = []
-    for k in a:
-        if a[k] != b[k]:
-            diffs.append((k, {f: (a[k][f], b[k][f]) for f in a[k]
-                              if a[k][f] != b[k][f]}))
-    assert not diffs, diffs[:5]
-
-
-def test_parity_on_synth_corpus_with_corruption(spark):
-    """Every field equal (including the sd map and the exact error
-    variant of corrupt lines) over the corpus that exercises all SD
-    classes, timestamp variants, and the corruption taxonomy."""
-    _assert_full_parity(synth.lines_df(spark, SF_SMOKE, corrupt=True))
-
-
-def test_parity_on_tricky_lines(spark):
-    lines = [
-        '<34>1 2003-10-11T22:14:15.003Z mymachine.example.com su - ID47 '
-        '- BOM﻿su root failed',
-        '<165>1 2003-08-24T05:14:15.000003-07:00 192.0.2.1 myproc 8710 '
-        '- - %% Its time to make the do-nuts.',
-        '<165>1 2003-10-11T22:14:15.003Z m evntslog - ID47 '
-        '[exampleSDID@32473 iut="3" eventSource="Application" '
-        'eventID="1011"] An application event log entry...',
-        '<165>1 2003-10-11T22:14:15.003Z m evntslog - ID47 '
-        '[exampleSDID@32473 iut="3"][examplePriority@32473 class="high"]',
-        '<34>1 - - - - - ',
-        '<34>1 - - - - -',
-        '<34>1 - - - - - -',
-        '<34>1 - - - - - [meta a="q\\"v" p="a\\\\b"] msg here',
-        '<34>1 - - - - - [meta x="1"][meta y="2" x="3"] dup merge',
-        '<34>1 - - - - - [meta][meta]',
-        '<34>1 - - - - - []',
-        '<34>1 - -hostname app 007 - - -web1west style',
-        '<34>1 - host app +12 - - plus pid',
-        '<34>1 - host app 99999999999999 - - too big pid',
-        '<34>1 - host app 0000000002147483647 - - max pid with zeros',
-        '<34>1 - host app -2147483648 - - min pid',
-        '<34>1 - host app -2147483649 - - under min pid',
-        '<34>1 2016-02-29T23:59:59.123456789+05:30 h a p m - leap',
-        '<34>1 2015-02-29T00:00:00Z h a p m - bad leap',
-        '<34>1 2016-13-01T00:00:00Z h a p m - bad month',
-        '<34>1 2016-01-01T24:00:00Z h a p m - bad hour',
-        '<34>1 2016-01-01T00:00:00.1234567890Z h a p m - 10 frac digits',
-        '<999>1 - h a p m - bad facility',
-        '<4096>1 - h a p m - bad pri',
-        'garbage line',
-        '',
-        '<34>1 - h a p m [unclosed',
-        '<34>1 - h a p m x not sd',
-        '<34>1 - h a p m [a] [b]',
-        '<34>1 - h a p m [a]x',
-        '<34>1 - h a p m -x',
-        '<34>1 - h a p m -  two spaces',
-        '<34>1 - h a p m [a]  two spaces',
-        '<34>1 - h a p m',
-        '<34>1 2003-10-11T22:14:15Z h a p m [a e="multi\nline"] '
-        'nl msg\nsecond',
-        '<34>1 2003-10-11T22:14:15Z h a p m [a e="esc\\\nnewline"] m',
-        '<34>1 - h a p m [' + 'x' * 129 + '] too long id',
-        '<34>1 - ' + 'h' * 256 + ' a p m - too long host',
-        # trailing line terminators: Java's $ matches BEFORE a final \n,
-        # so these must NOT route to the fast path (the reference
-        # rejects them with ExpectedTokenErr) — pins the \z anchor
-        '<34>1 - h a p m [a]\n',
-        '<34>1 - h a p m [a]\r\n',
-        '<34>1 - h a p m -\n',
-        '<34>1 2003-10-11T22:14:15Z h a p m - msg\n',
-    ]
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(lines)], "doc_id LONG, line STRING"
-    )
-    _assert_full_parity(df)
-
-
-def test_parity_on_seeded_mutation_fuzz(spark):
-    """Mutate valid synth lines (truncate, splice, flip chars) with a
-    seeded RNG; JVM and Python paths must agree on every mutant."""
-    base = [r["line"] for r in
-            synth.lines_df(spark, SF_SMOKE).limit(120).collect()]
-    rng = random.Random(42)
-    mutants = []
-    for s in base:
-        mutants.append(s)
-        mutants.append(s[: rng.randrange(len(s))])
-        i = rng.randrange(len(s))
-        mutants.append(s[:i] + rng.choice(' <>[]"\\-.:') + s[i + 1:])
-        j = rng.randrange(len(s))
-        mutants.append(s[:j] + rng.choice(["  ", "][", '="', "\x00", "é"])
-                       + s[j:])
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(mutants)], "doc_id LONG, line STRING"
-    )
-    _assert_full_parity(df)
-
-
-def test_fast_route_covers_wellformed_corpus(spark):
-    """The experiment only matters if the JVM branch actually takes the
-    traffic: every well-formed synth line must match the eligibility
-    regex (the whole point — SD-carrying rows included), and on the
-    corrupt corpus exactly the corrupt rows fall back."""
-    lines = synth.lines_df(spark, SF_SMOKE)
-    n = lines.count()
-    n_fast = lines.filter(F.col("line").rlike(ELIGIBLE_RE)).count()
-    assert n_fast == n, f"only {n_fast}/{n} rows eligible"
-
-    corrupt = synth.lines_df(spark, SF_SMOKE, corrupt=True)
-    n_bad = corrupt.filter(~F.col("line").rlike(ELIGIBLE_RE)).count()
-    errs = parse_df(corrupt).filter(F.col("parse_error").isNotNull()).count()
-    assert n_bad == errs, (n_bad, errs)
-
-
-def test_jvm_branch_has_no_python_nodes(spark):
-    """Plan shape: the union's fast leg is pure JVM (its only Python
-    node is the slow-branch MapInPandas), and there is exactly ONE
-    such node — the fallback."""
-    df = synth.lines_df(spark, SF_SMOKE)
-    plan = (parse_df_jvm(df)._jdf.queryExecution().executedPlan()
-            .toString())
-    assert plan.count("MapInPandas") == 1
-    assert "Union" in plan
+    row = jvm_rows[name]
+    _check(name, expected, row)
+    assert row["bytes_in"] == len(line.encode("utf-8"))
+    assert row["partition_id"] is not None

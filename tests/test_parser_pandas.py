@@ -77,6 +77,24 @@ def test_null_input_line():
     assert df.iloc[1]["parse_error"] is None
 
 
+def test_ymd_cache_stays_bounded():
+    """More distinct valid dates than the cache holds: it is cleared on a
+    full miss instead of growing, and every timestamp is still exact."""
+    import numpy as np
+
+    n = P._YMD_DAYS_CACHE_MAX + 20_000
+    dates = np.datetime_as_string(
+        np.datetime64("1700-01-01") + np.arange(n), unit="D")
+    lines = pd.Series([f"<13>1 {d}T01:02:03Z h a - - - m" for d in dates])
+    out = P.parse_lines(lines)
+    assert out["parse_error"].isna().all()
+    assert len(P._YMD_DAYS_CACHE) <= P._YMD_DAYS_CACHE_MAX
+    ymd = np.array([d.split("-") for d in dates], dtype=np.int64)
+    want = (P._days_from_civil(ymd[:, 0], ymd[:, 1], ymd[:, 2]) * 86400
+            + 3723)
+    assert (out["timestamp"].to_numpy(dtype=np.int64) == want).all()
+
+
 def test_differential_fuzz():
     """Property test: fast path == slow path on mutated corpus lines."""
     import random

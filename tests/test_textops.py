@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from sparklog import ann as ANN
 from sparklog import textops as TX
 
-from conftest import SF_CORRECT
+from conftest import SF_CORRECT, SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -1295,3 +1295,37 @@ def test_spread_nonfile_frames_use_partition_count(spark):
     assert TX.spread(wide) is wide
     narrow = spark.range(10).coalesce(1).selectExpr("id AS doc_id")
     assert TX.spread(narrow).rdd.getNumPartitions() == target
+
+
+def test_materialized_filter_reads_materialized_column(spark):
+    """Plan pin for the filter barrier: on clean_corpus_full the executed
+    Filter reads only the materialised predicate column. Without the
+    barrier PushDownPredicate inlines the PII scrub chain into the Filter
+    condition, which FilterExec then re-evaluates per reference."""
+    from sparklog.synth import load_documents
+
+    out = TX.clean_corpus_full(load_documents(spark, SF_SMOKE))
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    filters = [ln for ln in final.splitlines()
+               if ln.lstrip(" +-:*()0123456789").startswith("Filter ")]
+    assert filters, final
+    for ln in filters:
+        assert "__materialized_keep" in ln, ln
+        assert "regexp_replace" not in ln, ln
+
+
+def test_materialized_filter_keeps_caller_keep_column(spark):
+    """The barrier's own predicate column never replaces or drops a
+    caller column, whatever the caller named it."""
+    df = spark.createDataFrame(
+        [(i, i % 3 == 0, f"v{i}") for i in range(12)],
+        "doc_id LONG, _keep BOOLEAN, __materialized_keep STRING")
+    got = TX.materialized_filter(df, F.col("_keep"))
+    assert got.columns == df.columns
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (i, True, f"v{i}") for i in range(0, 12, 3)]
+    odd = TX.materialized_filter(df, F.col("doc_id") % 2 == 1)
+    assert odd.columns == df.columns
+    assert sorted(r["doc_id"] for r in odd.collect()) == list(range(1, 12, 2))
