@@ -198,36 +198,24 @@ def q_grok_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # multi-group grok over the synthesized RFC5424 line itself: 7 named
 # groups (2 typed) whose expected values all derive from the shared synth
-# arithmetic — the oracle-checkable way to prove the single-pass rewrite
-# (ONE regexp_replace + split instead of k+1 regexp_extracts) is
-# semantics-preserving, not just pytest-equal (r2 ask #5)
+# arithmetic, so the oracle checks every extracted group
 _GROK_LINE_PAT = (
     r"<%{INT:pri:int}>%{INT:ver:int} %{NOTSPACE:ts} %{NOTSPACE:host}"
     r" %{NOTSPACE:app} %{NOTSPACE:proc} %{NOTSPACE:msgid} .*"
 )
 
 
-def _grok_line(spark: SparkSession, sf_dir: str, single_pass: bool) -> DataFrame:
+def q_grok_line(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-group grok (k regexp_extracts; Catalyst prunes unused groups)."""
     from sparklog.grok import grok
 
     _ensure_shipped(spark)
     lines = synth.lines_df(spark, sf_dir)
-    out = grok(lines, "line", _GROK_LINE_PAT, single_pass=single_pass)
+    out = grok(lines, "line", _GROK_LINE_PAT)
     return out.select(
         "doc_id", "pri", "ver", "ts", "host", "app", "proc", "msgid",
         F.col("_grok_matched").cast("int").alias("matched"),
     )
-
-
-def q_grok_line(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group grok (k regexp_extracts; Catalyst prunes unused groups)."""
-    return _grok_line(spark, sf_dir, single_pass=False)
-
-
-def q_grok_line_sp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass grok (2 regex evaluations total) — same oracle as
-    q_grok_line, so a green row proves output identity."""
-    return _grok_line(spark, sf_dir, single_pass=True)
 
 
 def _grok_line_oracle() -> str:
@@ -688,13 +676,6 @@ def q_quantize_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.col("i").cast("long").alias("i"), "qv", "scale")
 
 
-def q_sessionize_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe two-phase sessionization ((hostname, day) then boundary
-    merge) — same semantics and oracle as q_sessionize, but no single
-    task ever holds a whole hot host."""
-    return PL.sessionize_scaled(_parsed(spark, sf_dir))
-
-
 def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL multimodal decode roundtrip: deterministic PCM16 WAV payloads
     are written per doc by the stdlib wave encoder and decoded back by
@@ -837,12 +818,6 @@ def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = MM.image_features(MM.synth_image_df(docs))
     return feats.select(
         "doc_id", "byte_len", "width", "height", "channels")
-
-
-def q_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Third sessionization twin: Spark's built-in session_window (pure
-    Catalyst, streaming-ready) — same semantics, same oracle."""
-    return PL.sessionize_native(_parsed(spark, sf_dir))
 
 
 def q_json_serialize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1104,18 +1079,12 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "top_hosts": q_top_hosts,
         "facility_rank": q_facility_rank,
         "sessionize": q_sessionize,
-        "sessionize_scaled": q_sessionize_scaled,
-        "sessionize_native": q_sessionize_native,
         "grok_events": q_grok_events,
         "grok_line": q_grok_line,
-        "grok_line_sp": q_grok_line_sp,
         "events_rollup": q_events_rollup,
         "events_user_stats": q_events_user_stats,
         "rate_anomalies": q_rate_anomalies,
-        "token_count": q_token_count,
-        "quality_score": q_quality_score,
         "dedup_exact": q_dedup_exact,
-        "lang_id": q_lang_id,
         "minhash_neardup": q_minhash_neardup,
         "neardup_components": q_neardup_components,
         "clean_corpus": q_clean_corpus,
@@ -1128,15 +1097,12 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "pack_texts": q_pack_texts,
         "quantize_emb": q_quantize_emb,
         "clean_corpus_full": q_clean_corpus_full,
-        "lm_score": q_lm_score,
         "canonical_url": q_canonical_url,
         "contamination": q_contamination,
         "profile": q_profile,
-        "oov_rate": q_oov_rate,
         "domain_stats": q_domain_stats,
         "domain_balance": q_domain_balance,
         "simhash": q_simhash,
-        "fingerprint": q_fingerprint,
         "ngram_jaccard": q_ngram_jaccard,
         "ann_topk": q_ann_topk,
         "lsh_topk": q_lsh_topk,
@@ -1152,13 +1118,20 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "html_extract": q_html_extract,
         "line_dedup": q_line_dedup,
         "url_filter": q_url_filter,
+        # operators unchanged for the longest sit last
+        "token_count": q_token_count,
+        "quality_score": q_quality_score,
+        "lang_id": q_lang_id,
+        "oov_rate": q_oov_rate,
+        "fingerprint": q_fingerprint,
+        "lm_score": q_lm_score,
     }
 
 
 def oracle_sql() -> dict[str, str]:
     # SQL-escape the BPE alternation for embedding in a DuckDB literal
     bpe = textops.BPE_TOKEN_RE.replace("'", "''")
-    out = {
+    return {
         "parse_fields": f"""
             SELECT doc_id,
                    {R.SEVERITY} AS severity,
@@ -2078,12 +2051,5 @@ def oracle_sql() -> dict[str, str]:
                          4) AS jaccard
             FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
         """,
+        "grok_line": _grok_line_oracle(),
     }
-    # the two-phase skew-safe operator and the built-in session_window
-    # twin have identical semantics — same oracle
-    out["sessionize_scaled"] = out["sessionize"]
-    out["sessionize_native"] = out["sessionize"]
-    # per-group and single-pass grok must produce IDENTICAL output
-    out["grok_line"] = _grok_line_oracle()
-    out["grok_line_sp"] = out["grok_line"]
-    return out

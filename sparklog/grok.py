@@ -74,15 +74,9 @@ def _group_names(java_style_pattern: str) -> list[tuple[str, int]]:
     return sorted(compiled.groupindex.items(), key=lambda kv: kv[1])
 
 
-# ASCII record separator: joins group values in the single-pass rewrite.
-# Not expressible in the printable-ASCII payloads grok targets; set
-# single_pass=False for inputs that may legitimately contain \x1e.
-_SEP = "\x1e"
-
-
 def grok(df: DataFrame, col: str, pattern: str,
          types: dict[str, str] | None = None,
-         keep: bool = True, single_pass: bool = False) -> DataFrame:
+         keep: bool = True) -> DataFrame:
     """Extract named-group columns from ``col`` using a grok/regex pattern.
 
     - pattern may use %{PRIM:name} or %{PRIM:name:type} aliases, or raw
@@ -90,14 +84,8 @@ def grok(df: DataFrame, col: str, pattern: str,
     - non-matching rows get null fields and _grok_matched = false
     - types maps group name -> spark cast type ("long", "double", ...),
       merged over any inline :type declarations
-    - single_pass=False (default): one regexp_extract per group. Unused
-      groups are column-pruned AWAY by Catalyst, so a query touching 2 of
-      10 groups pays for 2 — the right default for exploratory reads.
-    - single_pass=True: ONE regexp_replace rewrites the line into a
-      separator-joined group list which is then split — 2 regex
-      evaluations per row instead of k+1. Measured ~1.6x faster when a
-      pipeline consumes ALL groups (ETL materialization); choose it when
-      nothing will be pruned.
+    - one regexp_extract per group: unused groups are column-pruned away
+      by Catalyst, so a query touching 2 of 10 groups pays for 2
     """
     java_pat, inferred_types = _expand(pattern)
     types = {**inferred_types, **(types or {})}
@@ -107,43 +95,15 @@ def grok(df: DataFrame, col: str, pattern: str,
     anchored = java_pat if java_pat.startswith("^") else f"^{java_pat}$"
     matched = F.col(col).rlike(anchored).alias("_grok_matched")
     cols: list[Column] = []
-    if single_pass:
-        # Java replacement: non-participating optional groups render as ''
-        # — identical to regexp_extract's no-capture result. The packed
-        # array gets its OWN projection layer so the rewrite evaluates once
-        # (CollapseProject keeps a multiply-referenced expensive alias).
-        repl = _SEP.join(f"${i}" for _, i in names)
-        packed = F.split(
-            F.regexp_replace(F.col(col), anchored, repl), _SEP, -1
-        )
-        for pos, (name, _) in enumerate(names):
-            # try_element_at: unmatched rows keep their original string in
-            # `packed` (fewer elements) — must yield NULL, not an ANSI
-            # out-of-bounds error, regardless of CSE/codegen evaluation order
-            c = F.when(F.col("_grok_matched"),
-                       F.try_element_at(F.col("_grok_packed"), F.lit(pos + 1)))
-            t = (types or {}).get(name)
-            if t:
-                # try_cast, not cast: Spark 4 runs ANSI mode, where a typed
-                # group whose text doesn't fit (e.g. %{NUMBER:x:int} on
-                # '0.5', or '' from a non-participating optional group)
-                # would throw and kill the query; grok semantics want null
-                c = c.try_cast(_CASTS.get(t, t))
-            cols.append(c.alias(name))
-        base = df.withColumn("_grok_matched", matched).withColumn(
-            "_grok_packed", packed
-        )
-        out_cols = (list(df.columns) if keep else []) + cols + [
-            F.col("_grok_matched")
-        ]
-        return base.select(*out_cols)
     for name, i in names:
         c = F.regexp_extract(F.col(col), anchored, i)
         # regexp_extract returns '' on no-match; null it out
         c = F.when(F.col("_grok_matched"), c)
-        t = (types or {}).get(name)
+        t = types.get(name)
         if t:
-            c = c.try_cast(_CASTS.get(t, t))  # ANSI-safe: bad fit -> null
+            # try_cast: under ANSI mode a bad fit ('0.5' as int, '' from an
+            # unmatched optional group) would throw; grok wants null
+            c = c.try_cast(_CASTS.get(t, t))
         cols.append(c.alias(name))
     base = df.withColumn("_grok_matched", matched)
     out_cols = (list(df.columns) if keep else []) + cols + [F.col("_grok_matched")]

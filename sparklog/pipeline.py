@@ -98,31 +98,28 @@ def salted(df: DataFrame, key: str, num_partitions: int | None = None,
 
 SESSION_GAP_SECONDS = 1800
 
-_SESSION_SCHEMA = (
-    "hostname STRING, session_start LONG, session_end LONG, n_events LONG"
-)
-
 
 def sessionize_batch(parsed: DataFrame,
                      gap_seconds: int = SESSION_GAP_SECONDS,
                      bucket_seconds: int = 86400) -> DataFrame:
     """Batch sessionization as a custom grouped operator (applyInPandas):
-    event streams split on gaps > gap_seconds. The streaming twin
-    (sparklog/streaming.sessionize) shares the semantics; the DuckDB
+    event streams split on gaps > gap_seconds. The streaming path
+    (streaming.sessionize_stream_native) shares the semantics; the DuckDB
     oracle expresses the same thing with window functions, so the driver
     gate cross-checks the Python operator against pure SQL.
 
     Skew-safe: the pandas kernel runs per (hostname, day-bucket) — the
     Zipf-head host spreads over its active days instead of pinning one
-    task — and the shared boundary-merge pass stitches sessions that
-    cross bucket edges back together exactly."""
+    task — and the boundary-merge pass stitches sessions that cross
+    bucket edges back together exactly. The built-in session_window is
+    not used here: its batch plan is Exchange hashpartitioning(hostname)
+    -> MergingSessions, which puts every hot-host event in one task."""
 
     def fn(pdf):
         import numpy as np
         import pandas as pd
 
-        # vectorized split (same diff/flatnonzero kernel as the streaming
-        # twin, streaming.py): break indices where the gap is exceeded
+        # vectorized split: break indices where the gap is exceeded
         ts = np.sort(pdf["timestamp"].to_numpy(np.int64))
         brk = np.flatnonzero(np.diff(ts) > gap_seconds) + 1
         bounds = np.concatenate(([0], brk, [ts.size]))
@@ -155,8 +152,8 @@ def _session_events(parsed: DataFrame) -> DataFrame:
 
 def _merge_boundary_sessions(sess1: DataFrame,
                              gap_seconds: int) -> DataFrame:
-    """Phase 2 shared by both sessionizers: stitch per-bucket sessions
-    back together across bucket edges.
+    """Phase 2 of sessionize_batch: stitch per-bucket sessions back
+    together across bucket edges.
 
     Takes ONLY each bucket's first and last session per host (<= 2 rows
     per host-day, tiny) and re-applies the same gap rule across buckets,
@@ -193,69 +190,6 @@ def _merge_boundary_sessions(sess1: DataFrame,
         .select("hostname", "session_start", "session_end", "n_events")
     )
     return interior.unionByName(merged)
-
-
-def sessionize_scaled(parsed: DataFrame,
-                      gap_seconds: int = SESSION_GAP_SECONDS,
-                      bucket_seconds: int = 86400) -> DataFrame:
-    """Skew-safe two-phase sessionization, pure window functions (no
-    Python): phase 1 sessionizes within (hostname, time-bucket) — the
-    Zipf-head host spreads over as many tasks as it has active days —
-    and the shared phase 2 merges bucket-edge sessions back exactly.
-    Same semantics (and same DuckDB oracle) as sessionize_batch.
-    """
-    from pyspark.sql import Window
-
-    events = _session_events(parsed).withColumn(
-        "_bkt", (F.col("timestamp") / bucket_seconds).cast("long")
-    )
-    w1 = Window.partitionBy("hostname", "_bkt").orderBy("timestamp")
-    lag_ts = F.lag("timestamp").over(w1)
-    brk = F.when(
-        lag_ts.isNull() | (F.col("timestamp") - lag_ts > gap_seconds), 1
-    ).otherwise(0)
-    sess1 = (
-        events.withColumn("_sid", F.sum(brk).over(
-            w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("hostname", "_bkt", "_sid")
-        .agg(
-            F.min("timestamp").alias("session_start"),
-            F.max("timestamp").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    return _merge_boundary_sessions(sess1, gap_seconds)
-
-
-def sessionize_native(parsed: DataFrame,
-                      gap_seconds: int = SESSION_GAP_SECONDS) -> DataFrame:
-    """Gap sessionization via Spark's BUILT-IN session_window — the
-    idiomatic Catalyst path (zero custom code, one MergingSessionsExec /
-    sort-based session aggregation, usable unchanged under Structured
-    Streaming with a watermark, where the state store shards per
-    (hostname, window)).
-
-    Boundary convention: our semantics (and the DuckDB oracle) MERGE at a
-    gap of exactly gap_seconds (`ts - lag > gap` breaks); session_window
-    merges only when the next event is strictly inside window_end =
-    last_ts + gap. Timestamps are integer seconds, so a gap duration of
-    gap_seconds + 1 makes the two conventions exactly equivalent.
-    Same oracle as sessionize_batch/sessionize_scaled.
-    """
-    events = _session_events(parsed).withColumn(
-        "_ts", F.timestamp_seconds(F.col("timestamp"))
-    )
-    return (
-        events.groupBy(
-            "hostname", F.session_window("_ts", f"{gap_seconds + 1} seconds")
-        )
-        .agg(
-            F.min("timestamp").cast("long").alias("session_start"),
-            F.max("timestamp").cast("long").alias("session_end"),
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-        )
-        .select("hostname", "session_start", "session_end", "n_events")
-    )
 
 
 def write_bucketed(df: DataFrame, table: str, key: str = "doc_id",

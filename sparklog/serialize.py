@@ -16,17 +16,10 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from sparklog.schema import FACILITY_NAMES, SEVERITY_NAMES
-
-_JSON_FIELDS = [
-    "severity", "facility", "version", "timestamp", "timestamp_nanos",
-    "hostname", "appname", "procid_pid", "procid_name", "msgid", "sd", "msg",
-]
 
 
 def _plain(v):
@@ -38,12 +31,14 @@ def _plain(v):
 
 
 def _sd_to_dict(sd):
-    """Arrow hands maps to pandas as lists of (k, v) tuples; normalize."""
+    """serde's BTreeMap order: SD-IDs and param names sorted, whatever
+    order the map arrives in (Arrow hands maps to pandas as lists of
+    (k, v) tuples; collect() hands them over as hash-ordered dicts)."""
     if sd is None:
         return {}
-    if isinstance(sd, dict):
-        return {k: dict(v) if not isinstance(v, dict) else v for k, v in sd.items()}
-    return {k: dict(v) for k, v in sd}
+    items = sd.items() if isinstance(sd, dict) else sd
+    return {k: dict(sorted(dict(v).items()))
+            for k, v in sorted(items, key=lambda kv: kv[0])}
 
 
 def message_to_json(row: dict) -> str:
@@ -65,14 +60,6 @@ def message_to_json(row: dict) -> str:
         "msg": row["msg"],
     }
     return json.dumps(obj, separators=(",", ":"), ensure_ascii=False)
-
-
-@F.pandas_udf(T.StringType())
-def to_json_udf(p: pd.DataFrame) -> pd.Series:
-    # to_dict('records') materializes plain dicts in one C pass — an order
-    # of magnitude cheaper than per-row pandas dispatch (.apply(axis=1))
-    return pd.Series([message_to_json(r) for r in p.to_dict("records")],
-                     index=p.index)
 
 
 def _jstr(col_sql: str) -> str:
@@ -105,8 +92,8 @@ def json_col(parsed: DataFrame) -> Column:
     to_json would drop them, hence the field-by-field concat); enums
     serialize as name strings; procid is the bare-int/string union; sd's
     key order is the parser's sorted storage, which to_json preserves.
-    The pandas implementation (json_col_py) is retained as the golden
-    cross-check."""
+    tests/test_serialize.py checks it byte for byte against the Python
+    reference, message_to_json."""
     procid = (
         "CASE WHEN procid_pid IS NOT NULL THEN CAST(procid_pid AS STRING) "
         f"WHEN procid_name IS NOT NULL THEN {_jstr('procid_name')} "
@@ -128,8 +115,3 @@ def json_col(parsed: DataFrame) -> Column:
     ])
     return F.expr(f"concat({pieces})")
 
-
-def json_col_py(parsed: DataFrame) -> Column:
-    """Reference implementation (Arrow-batched pandas): exact same bytes,
-    kept as the cross-check for the JVM path."""
-    return to_json_udf(F.struct(*[F.col(c) for c in _JSON_FIELDS]))

@@ -42,86 +42,6 @@ def windowed_counts(parsed: DataFrame, watermark: str = "10 minutes") -> DataFra
     )
 
 
-SESSION_GAP_SECONDS = 1800
-
-_SESSION_OUT_SCHEMA = (
-    "hostname STRING, session_start LONG, session_end LONG, n_events LONG"
-)
-_SESSION_STATE_SCHEMA = "start_ts LONG, last_ts LONG, n LONG"
-
-
-def sessionize(parsed: DataFrame, gap_seconds: int = SESSION_GAP_SECONDS) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): per-hostname
-    sessionization with a gap timeout. A session closes when the next
-    event for the host arrives more than gap_seconds later; closed
-    sessions are emitted, the open session persists in state across
-    micro-batches (and across restarts via the checkpoint).
-
-    Skew note (documented divergence from the batch twin): state is keyed
-    on BARE hostname, so the Zipf-head host's events all pass through one
-    state partition per trigger — unlike pipeline.sessionize_batch, which
-    splits work per (hostname, day-bucket) and merges bucket edges. The
-    (host, bucket) trick does NOT port here: the boundary merge is a
-    second cross-key pass, and chaining another stateful operator after
-    applyInPandasWithState is unsupported in Structured Streaming. The
-    mitigations are (a) the kernel below is a vectorized numpy scan, so
-    the per-trigger hot-host cost is one sort + O(n) array ops — bounded
-    by micro-batch size, with O(1)-per-host state either way — and (b)
-    sessionize_stream_native is the recommended scale path: Spark's
-    built-in session_window shards its state store per (host, window),
-    so a hot host spreads across its session windows.
-    """
-
-    def fn(key, pdfs, state):
-        import numpy as np
-        import pandas as pd
-
-        parts = [pdf["timestamp"].dropna().to_numpy(dtype="int64")
-                 for pdf in pdfs]
-        ts = np.sort(np.concatenate(parts)) if parts else np.empty(0, "int64")
-        if state.exists:
-            start_ts, last_ts, n = state.get
-        else:
-            start_ts = last_ts = n = None
-        if ts.size == 0:
-            if start_ts is not None:
-                state.update((start_ts, last_ts, n))
-            return
-        # vectorized split: break indices where the gap is exceeded —
-        # the open session from state is prepended as a (start,last,n)
-        # seed so a small first-gap merges it with the first new run
-        brk = np.flatnonzero(np.diff(ts) > gap_seconds) + 1
-        bounds = np.concatenate(([0], brk, [ts.size]))
-        runs = [(int(ts[a]), int(ts[b - 1]), int(b - a))
-                for a, b in zip(bounds[:-1], bounds[1:])]
-        out = []
-        if start_ts is not None:
-            s0, e0, c0 = runs[0]
-            if s0 - last_ts <= gap_seconds:
-                runs[0] = (min(start_ts, s0), e0, n + c0)
-            else:
-                out.append((key[0], start_ts, last_ts, n))
-        out.extend((key[0], s, e, c) for s, e, c in runs[:-1])
-        state.update(runs[-1])
-        if out:
-            yield pd.DataFrame(
-                out, columns=["hostname", "session_start", "session_end", "n_events"]
-            )
-
-    events = parsed.filter(
-        F.col("parse_error").isNull()
-        & F.col("hostname").isNotNull()
-        & F.col("timestamp").isNotNull()
-    ).select("hostname", "timestamp")
-    return events.groupBy("hostname").applyInPandasWithState(
-        fn,
-        outputStructType=_SESSION_OUT_SCHEMA,
-        stateStructType=_SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-
-
 def dedup_stream(parsed: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Cross-batch duplicate suppression for retransmitted log lines
     (UDP syslog re-sends, at-least-once collectors): keep the first
@@ -192,31 +112,36 @@ def clean_stream(docs: DataFrame, lang: str = "en", min_chars: int = 100,
 
 
 def sessionize_stream_native(parsed: DataFrame,
-                             gap_seconds: int = SESSION_GAP_SECONDS,
+                             gap_seconds: int = PL.SESSION_GAP_SECONDS,
                              watermark: str = "2 hours") -> DataFrame:
-    """Streaming sessionization via the BUILT-IN session_window — the
-    recommended scale path (see the skew note on sessionize). Sessions
-    are emitted once the watermark passes their close; state lives in
-    the JVM state store keyed by (hostname, window), so a hot host's
-    state spreads across its windows instead of one Python worker.
+    """Streaming sessionization via the built-in session_window. Sessions
+    are emitted once the watermark passes their close, so an idle host's
+    last session is emitted too. State lives in the JVM state store; the
+    sessionizer adds no Python worker.
 
-    Boundary convention matches pipeline.sessionize_native: gap + 1s
-    window duration makes integer-second semantics identical to the
-    batch/oracle definition (merge at exactly gap_seconds).
+    Skew note: the state is keyed on bare hostname. The executed plan is
+    Exchange hashpartitioning(hostname) REQUIRED_BY_STATEFUL_OPERATOR ->
+    SessionWindowStateStoreRestore [hostname] -> MergingSessions ->
+    SessionWindowStateStoreSave [hostname], so a hot host's events pass
+    through one task per trigger; that cost is bounded by the micro-batch
+    size. pipeline.sessionize_batch splits a host per (hostname,
+    day-bucket) instead, but here its bucket-edge merge would have to be
+    a second stateful pass.
+
+    Boundary convention: session_window merges when the next event is at
+    or before last_ts + duration, so a gap_seconds duration is the
+    batch/oracle rule exactly (merge at a gap of gap_seconds, split at
+    gap_seconds + 1).
     """
     events = (
-        parsed.filter(
-            F.col("parse_error").isNull()
-            & F.col("hostname").isNotNull()
-            & F.col("timestamp").isNotNull()
-        )
+        PL._session_events(parsed)
         .withColumn("event_ts", F.timestamp_seconds(F.col("timestamp")))
         .withWatermark("event_ts", watermark)
     )
     return (
         events.groupBy(
             "hostname",
-            F.session_window("event_ts", f"{gap_seconds + 1} seconds"),
+            F.session_window("event_ts", f"{gap_seconds} seconds"),
         )
         .agg(
             F.min("timestamp").cast("long").alias("session_start"),

@@ -79,25 +79,6 @@ def test_grok_unnamed_groups_use_real_indices(spark):
     assert r["a"] == 12 and r["b"] == 34 and r["_grok_matched"]
 
 
-def test_grok_single_pass_equals_per_group(spark, access_logs):
-    """The 2-regex-eval rewrite path and the k+1-eval extraction path are
-    row-for-row identical, including non-matching rows and typed casts."""
-    fast = grok(access_logs, "raw", _PATTERN, single_pass=True) \
-        .orderBy("id").collect()
-    slow = grok(access_logs, "raw", _PATTERN, single_pass=False) \
-        .orderBy("id").collect()
-    assert [tuple(r) for r in fast] == [tuple(r) for r in slow]
-
-
-def test_grok_single_pass_regex_eval_count(spark, access_logs):
-    """Plan audit: exactly one regexp_replace and one rlike per row, not
-    one regexp_extract per group."""
-    out = grok(access_logs, "raw", _PATTERN, single_pass=True)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("regexp_replace") == 1
-    assert "regexp_extract" not in plan
-
-
 def test_grok_inline_type_alias(spark):
     """%{PRIM:name:type} three-part aliases expand AND cast (previously the
     alias regex silently left the three-part form unexpanded)."""
@@ -130,14 +111,12 @@ def test_grok_typed_cast_is_ansi_safe(spark):
     """Spark 4 runs ANSI mode: a typed group whose text doesn't fit the
     type (%{NUMBER:x:int} matching '0.5', or '' from a non-participating
     optional group) must yield NULL, not a NumberFormatException that
-    kills the query — in BOTH extraction modes."""
+    kills the query."""
     df = spark.createDataFrame(
         [(0, "v=0.5"), (1, "v=7"), (2, "v=")],
         "id LONG, raw STRING",
     )
     pat = r"v=(?<x>[0-9.]*)"
-    for sp in (False, True):
-        rows = {r["id"]: r["x"]
-                for r in grok(df, "raw", pat, types={"x": "int"},
-                              single_pass=sp).collect()}
-        assert rows == {0: None, 1: 7, 2: None}, f"single_pass={sp}: {rows}"
+    rows = {r["id"]: r["x"]
+            for r in grok(df, "raw", pat, types={"x": "int"}).collect()}
+    assert rows == {0: None, 1: 7, 2: None}, rows

@@ -164,20 +164,7 @@ def test_sd_lang_matches_documents(spark, parsed):
     assert joined.count() == 0
 
 
-def test_sessionize_scaled_matches_batch(spark):
-    """Two-phase (hostname, day) sessionization is semantically identical
-    to the single-window operator on real parsed data."""
-    from sparklog import pipeline as PL
-    from sparklog import synth
-    from sparklog.udf import parse_df
-
-    parsed = parse_df(synth.lines_df(spark, "/root/testdata/sf0.001"))
-    a = sorted(map(tuple, PL.sessionize_batch(parsed).collect()))
-    b = sorted(map(tuple, PL.sessionize_scaled(parsed).collect()))
-    assert a == b
-
-
-def test_sessionize_scaled_merges_across_buckets(spark):
+def test_sessionize_batch_merges_across_buckets(spark):
     """Sessions spanning bucket edges — including a chain across an empty
     middle bucket — merge back exactly; interior sessions are untouched."""
     from sparklog import pipeline as PL
@@ -197,7 +184,7 @@ def test_sessionize_scaled_merges_across_buckets(spark):
         "hostname STRING, timestamp LONG, parse_error STRING",
     )
     got = {(r["hostname"], r["session_start"], r["session_end"], r["n_events"])
-           for r in PL.sessionize_scaled(parsed).collect()}
+           for r in PL.sessionize_batch(parsed).collect()}
     assert got == {
         ("a", 85800, 87000, 2),
         ("a", 136400, 136460, 2),

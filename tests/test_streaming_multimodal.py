@@ -101,60 +101,11 @@ def test_streaming_watermark_drops_late_data(spark, tmp_path):
     assert counts.get("2016-01-10 12") == 2, counts
 
 
-def test_stateful_sessionize_across_batches(spark, tmp_path):
-    """applyInPandasWithState sessionization: the open session survives in
-    state across micro-batches (via the resumed checkpoint); a >gap event
-    in batch 2 closes and emits the session opened in batch 1."""
-    in_dir = str(tmp_path / "in")
-    ck = str(tmp_path / "ck")
-    out_dir = str(tmp_path / "out")
-    os.makedirs(in_dir)
-
-    def line(ts: str) -> str:
-        return f"<14>1 {ts} hostA app - - - m"
-
-    def run_once():
-        parsed = ST.parse_stream(ST.read_line_stream(spark, in_dir))
-        q = (
-            ST.sessionize(parsed, gap_seconds=1800)
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    # batch 1: two events 10 min apart — one open session, nothing emitted
-    with open(f"{in_dir}/a.txt", "w") as f:
-        f.write(line("2016-01-10T10:00:00Z") + "\n")
-        f.write(line("2016-01-10T10:10:00Z") + "\n")
-    run_once()
-    try:
-        n0 = spark.read.parquet(out_dir).count()
-    except Exception:
-        n0 = 0
-    assert n0 == 0
-
-    # batch 2: a 2h-later event closes the session from batch 1
-    with open(f"{in_dir}/b.txt", "w") as f:
-        f.write(line("2016-01-10T12:10:00Z") + "\n")
-    run_once()
-    rows = spark.read.parquet(out_dir).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["hostname"] == "hostA"
-    assert r["n_events"] == 2
-    assert r["session_start"] == 1452420000  # 2016-01-10T10:00:00Z
-    assert r["session_end"] == 1452420600    # 10:10:00Z
-
-
 def test_stateful_sessionize_hot_host_matches_batch(spark, tmp_path):
     """Skew case for the streaming sessionizer: a Zipf-head host with
-    hundreds of events per trigger (all funneled through its single state
-    key — the documented divergence from the batch twin) must still emit
-    exactly the batch operator's sessions once a later batch closes them."""
+    hundreds of events per trigger (all through its one bare-hostname
+    state key) must emit exactly the batch operator's sessions once the
+    watermark has passed them; sessions still open stay in state."""
     from sparklog import pipeline as PL
     from sparklog.udf import parse_df
 
@@ -172,31 +123,36 @@ def test_stateful_sessionize_hot_host_matches_batch(spark, tmp_path):
         return f"<14>1 {ts.strftime('%Y-%m-%dT%H:%M:%S')}Z {host} app - - - m"
 
     # hot host: 300 events a minute apart with one 2h hole -> 2 sessions;
-    # two cold hosts with a session each
+    # two cold hosts with a session each; an edge host whose gaps are
+    # exactly gap (merges) and gap + 1 (splits) -> 2 sessions
     lines1 = [line("hot", base + 60 * i) for i in range(150)]
     lines1 += [line("hot", base + 7200 + 60 * 150 + 60 * i) for i in range(150)]
     lines1 += [line("cold1", base), line("cold1", base + 600),
                line("cold2", base + 120)]
+    lines1 += [line("edge", base + t) for t in (0, 1800, 1800 + 1801)]
 
     def run_once():
         parsed = ST.parse_stream(ST.read_line_stream(spark, in_dir))
         q = (
-            ST.sessionize(parsed, gap_seconds=1800)
+            ST.sessionize_stream_native(parsed, gap_seconds=1800,
+                                        watermark="2 hours")
             .writeStream.format("parquet").outputMode("append")
             .option("path", out_dir).option("checkpointLocation", ck)
             .trigger(availableNow=True).start()
         )
         q.awaitTermination(300)
 
-    with open(f"{in_dir}/a.txt", "w") as f:
-        f.write("\n".join(lines1) + "\n")
-    run_once()
-
-    # batch 2: one far-future event per host closes every open session
-    closers = [line(h, base + 10 * 86400) for h in ("hot", "cold1", "cold2")]
-    with open(f"{in_dir}/b.txt", "w") as f:
-        f.write("\n".join(closers) + "\n")
-    run_once()
+    # batch b moves the watermark a day past every batch-a session; batch
+    # c runs with that watermark. The b/c events form sessions that stay
+    # open, so only batch a's sessions are emitted.
+    hosts = ("hot", "cold1", "cold2", "edge")
+    trailing = ([line(h, base + 86400) for h in hosts],
+                [line(h, base + 86400 + 60) for h in hosts])
+    for fname, lines in zip(("a.txt", "b.txt", "c.txt"),
+                            (lines1, *trailing)):
+        with open(f"{in_dir}/{fname}", "w") as f:
+            f.write("\n".join(lines) + "\n")
+        run_once()
 
     got = {
         (r["hostname"], r["session_start"], r["session_end"], r["n_events"])
@@ -209,13 +165,14 @@ def test_stateful_sessionize_hot_host_matches_batch(spark, tmp_path):
         (r["hostname"], r["session_start"], r["session_end"], r["n_events"])
         for r in PL.sessionize_batch(parse_df(static)).collect()
     }
+    assert len(want) == 6
     assert got == want
 
 
 def test_streaming_native_session_window(spark, tmp_path):
-    """sessionize_stream_native (built-in session_window + watermark — the
-    recommended skew-safe streaming path): a session is emitted once the
-    watermark passes its close."""
+    """sessionize_stream_native (built-in session_window + watermark): a
+    session opened in one checkpointed batch is emitted once a later
+    batch's watermark passes its close."""
     in_dir = str(tmp_path / "in")
     ck = str(tmp_path / "ck")
     out_dir = str(tmp_path / "out")
