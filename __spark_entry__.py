@@ -630,12 +630,12 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the gate data. That makes the exact-top-k DuckDB oracle applicable
 # verbatim: a green row PROVES candidate generation lost nothing (the
 # trick that made minhash_neardup oracle-checkable). Scale behavior is
-# covered separately: auto-derived params (ann._auto_bits /
-# ivf_train_fraction) plus clustered-corpus recall tests in
+# covered separately: auto-derived params (ann._auto_bits, ivf_topk's
+# sqrt(n) centroid count) plus clustered-corpus recall tests in
 # tests/test_textops.py, where real cluster structure gives recall 1.0 at
 # a ~12% probe fraction.
 LSH_GATE = dict(n_bits=3, n_tables=8, multiprobe=1)
-IVF_GATE = dict(n_centroids=8, n_probe=7, quantizer="sample")
+IVF_GATE = dict(n_centroids=8, n_probe=7)
 
 
 def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -647,10 +647,9 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (inverted-list) ANN with the deterministic sample quantizer —
-    KMeans center floats vary with the caller's partitioning, so the
-    driver-gated config uses hash-sampled centers (bit-reproducible on
-    any session). Gate params give recall 1.0 at sf0.01 -> exact oracle."""
+    """IVF (inverted-list) ANN over hash-sampled centers (bit-reproducible
+    on any session and partitioning). Gate params give recall 1.0 at
+    sf0.01 -> exact oracle."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return ANN.ivf_topk(emb, n_queries=8, k=5, **IVF_GATE)
 

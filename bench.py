@@ -182,8 +182,7 @@ def run_bench(cpus: int, sf_dir: str, target_rows: int = 2_000_000,
             # scale-default parameterizations (auto-derived bits /
             # centroids), not the recall-tuned gate configs
             ("lsh_topk", lambda: ann.lsh_topk(emb).count()),
-            ("ivf_topk",
-             lambda: ann.ivf_topk(emb, quantizer="sample").count()),
+            ("ivf_topk", lambda: ann.ivf_topk(emb).count()),
         ]
 
         # warm-up: spawn python workers / JIT / page-cache the staged files

@@ -22,6 +22,8 @@ run actually consumes:
                    of every train/valid doc vs the TEST split's k-shingles;
                    docs at/above the threshold are quarantined. Test docs
                    are the eval set and are never self-quarantined.
+                   The planner broadcasts the eval shingle set or
+                   shuffles both sides, from its measured size.
   4. lm gate     — optional (--lm-threshold): textops.lm_score with a
                    bounded vocabulary (--lm-vocab-k); docs whose mean
                    negative log-prob exceeds the threshold (gibberish /
@@ -65,9 +67,6 @@ def main() -> None:
     ap.add_argument("--decontam-threshold", type=float, default=None,
                     help="quarantine train/valid docs whose shingle overlap "
                          "with the test split is >= this rate (off if unset)")
-    ap.add_argument("--decontam-shuffle", action="store_true",
-                    help="shuffle the eval-membership join instead of "
-                         "broadcasting it (the terabyte-eval path)")
     ap.add_argument("--lm-threshold", type=float, default=None,
                     help="quarantine docs with mean_neg_logprob above this "
                          "(off if unset)")
@@ -125,10 +124,7 @@ def main() -> None:
     if args.decontam_threshold is not None:
         ev = clean.filter(F.col("split") == "test").select("doc_id", "text")
         cand = clean.filter(F.col("split") != "test")
-        rates = textops.contamination(
-            cand.select("doc_id", "text"), ev,
-            broadcast=not args.decontam_shuffle,
-        )
+        rates = textops.contamination(cand.select("doc_id", "text"), ev)
         dirty = rates.filter(
             F.col("contamination_rate") >= args.decontam_threshold
         ).select("doc_id")

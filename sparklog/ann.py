@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 LSH_TABLES = 4
 LSH_TARGET_FRACTION = 0.02   # max expected fraction of corpus probed/query
 LSH_MAX_BUCKET_ROWS = 4096   # bucket granularity floor at huge n
-IVF_MAX_TRAIN_ROWS = 65536   # KMeans never iterates over more than ~this
 
 
 def _auto_bits(n: int, n_tables: int, multiprobe: int,
@@ -180,38 +179,19 @@ def embedding_neardup(emb: DataFrame, threshold: float = 0.95,
     )
 
 
-def ivf_train_fraction(n: int, max_train_rows: int = IVF_MAX_TRAIN_ROWS) -> float:
-    """Sampling fraction that bounds the KMeans training set to
-    ~max_train_rows regardless of corpus size. At 100 TB a full-corpus
-    multi-pass KMeans.fit is exactly what must not happen; a 64k-row
-    sample trains a coarse quantizer of the same quality (centers are a
-    low-dimensional summary — they don't sharpen past ~1k rows/centroid)."""
-    if n <= max_train_rows:
-        return 1.0
-    return max_train_rows / n
-
-
 def ivf_topk(emb: DataFrame, n_queries: int = 8, k: int = 5,
-             n_centroids: int | None = None, n_probe: int | None = None,
-             seed: int = 7, train_fraction: float | None = None,
-             max_train_rows: int = IVF_MAX_TRAIN_ROWS,
-             quantizer: str = "kmeans") -> DataFrame:
+             n_centroids: int | None = None,
+             n_probe: int | None = None) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the coarse-quantizer scale path.
 
-    1. Pick coarse centers. quantizer="kmeans": pyspark.ml KMeans trained
-       on a BOUNDED sample — train_fraction=None derives
-       min(1, max_train_rows/n), so the fit never iterates over more than
-       ~64k rows no matter the corpus size. quantizer="sample": centers
-       are n_centroids corpus vectors chosen by hash order — fully
-       DETERMINISTIC across sessions/partitionings (KMeans float-sum
-       order varies with partitioning, so its exact output is not
-       reproducible bit-for-bit on a caller-provided session; the sample
-       quantizer is what the driver's exact-top-k oracle gates).
-       Either way centers are tiny (n_centroids x dim) and broadcast.
+    1. Pick coarse centers: n_centroids corpus vectors chosen by hash
+       order — DETERMINISTIC across sessions/partitionings, so the
+       driver's exact-top-k oracle can gate the result. Centers are tiny
+       (n_centroids x dim) and broadcast.
     2. Assign every corpus vector to its nearest center: ONE scan with a
-       JVM argmin fold over the broadcast center array — no shuffle, no
-       second ML pass. The inverted lists are just a centroid_id column
-       (at 100 TB this is the partitioning key you'd bucket the lake by).
+       JVM argmin fold over the broadcast center array — no shuffle. The
+       inverted lists are just a centroid_id column (at 100 TB this is
+       the partitioning key you'd bucket the lake by).
     3. Each query probes only its n_probe nearest centers, so the
        candidate join touches ~n_probe/n_centroids of the corpus instead
        of all of it; exact cosine re-ranks candidates.
@@ -224,40 +204,18 @@ def ivf_topk(emb: DataFrame, n_queries: int = 8, k: int = 5,
     from sparklog.textops import spread
 
     emb = spread(emb)
-    # train_fraction only matters on the kmeans branch — deriving it for
-    # quantizer="sample" would cost a full count() action per call (the
-    # shipped gate config) for a value that is never read
-    need_fraction = train_fraction is None and quantizer != "sample"
-    if n_centroids is None or need_fraction:
+    if n_centroids is None:
         n = emb.count()
-        if n_centroids is None:
-            n_centroids = max(4, min(4096, int(math.isqrt(max(n, 1)))))
-        if need_fraction:
-            train_fraction = ivf_train_fraction(n, max_train_rows)
+        n_centroids = max(4, min(4096, int(math.isqrt(max(n, 1)))))
     if n_probe is None:
         n_probe = max(2, n_centroids // 8)
-    if quantizer == "sample":
-        # deterministic hash-ordered sample; ids in hash order
-        rows = (
-            emb.select("vec_id", "embedding")
-            .orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
-            .limit(n_centroids).collect()
-        )
-        centers = [[float(x) for x in r["embedding"]] for r in rows]
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feats = emb.select(
-            "vec_id",
-            array_to_vector(F.col("embedding").cast("array<double>")).alias("_f"),
-        )
-        train = feats if train_fraction >= 1.0 else feats.sample(
-            fraction=train_fraction, seed=seed
-        )
-        model = KMeans(k=n_centroids, seed=seed, featuresCol="_f",
-                       predictionCol="_c").fit(train)
-        centers = [[float(x) for x in c] for c in model.clusterCenters()]
+    # deterministic hash-ordered sample; ids in hash order
+    rows = (
+        emb.select("vec_id", "embedding")
+        .orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
+        .limit(n_centroids).collect()
+    )
+    centers = [[float(x) for x in r["embedding"]] for r in rows]
     centroids = emb.sparkSession.createDataFrame(
         [(i, c) for i, c in enumerate(centers)],
         "centroid_id INT, center ARRAY<DOUBLE>",

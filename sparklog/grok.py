@@ -75,9 +75,11 @@ def _group_names(java_style_pattern: str) -> list[tuple[str, int]]:
 
 
 def grok(df: DataFrame, col: str, pattern: str,
-         types: dict[str, str] | None = None,
-         keep: bool = True) -> DataFrame:
+         types: dict[str, str] | None = None) -> DataFrame:
     """Extract named-group columns from ``col`` using a grok/regex pattern.
+
+    Output: every input column, then one column per named group, then
+    _grok_matched.
 
     - pattern may use %{PRIM:name} or %{PRIM:name:type} aliases, or raw
       (?<name>...) groups
@@ -106,5 +108,4 @@ def grok(df: DataFrame, col: str, pattern: str,
             c = c.try_cast(_CASTS.get(t, t))
         cols.append(c.alias(name))
     base = df.withColumn("_grok_matched", matched)
-    out_cols = (list(df.columns) if keep else []) + cols + [F.col("_grok_matched")]
-    return base.select(*out_cols)
+    return base.select(*df.columns, *cols, F.col("_grok_matched"))

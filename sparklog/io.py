@@ -14,45 +14,33 @@ The reference consumes one RFC 5424 line at a time from a socket/file
 
 Scale posture: text/json/csv scans are splittable and parallel. Envelope
 sources carry a trusted id; raw text gets doc_id = xxhash64(file, line,
-occurrence) by default, which is stable across re-reads with any split
+occurrence), which is stable across re-reads with any split
 layout (see read_syslog_text).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparklog.udf import parse_df
 
 
-def read_syslog_text(spark: SparkSession, path: str,
-                     stable_ids: bool = True) -> DataFrame:
+def read_syslog_text(spark: SparkSession, path: str) -> DataFrame:
     """Newline-delimited raw RFC 5424 files -> (doc_id, line).
 
-    stable_ids=True (default): doc_id = xxhash64(file, line, occurrence),
-    where occurrence numbers repeats of the same line within a file. The
-    resulting (doc_id, line) SET is identical across re-reads regardless
+    doc_id = xxhash64(file, line, occurrence), where occurrence numbers
+    repeats of the same line within a file. The resulting (doc_id, line) SET is identical across re-reads regardless
     of split count/order (identical lines are interchangeable, so their
     occurrence order doesn't matter) — idempotent re-processing works.
     Costs one shuffle on (file, line); at scale that key is as
-    well-distributed as the content itself.
-
-    stable_ids=False: doc_id = monotonically_increasing_id() — free, but
-    only stable within a single read (ids shift when the split layout
-    changes); use for one-shot scans. (A previous id_col parameter was
-    removed: spark.read.text yields a single value column, so there is
-    no envelope id to select — the JSON/CSV readers cover trusted ids.)
+    well-distributed as the content itself. (spark.read.text yields a
+    single value column, so there is no envelope id to select — the
+    JSON/CSV readers cover trusted ids.)
     """
     df = spark.read.text(path).select(
         F.input_file_name().alias("_file"), F.col("value").alias("line")
     )
-    if not stable_ids:
-        return df.select(
-            F.monotonically_increasing_id().alias("doc_id"), "line"
-        )
-    from pyspark.sql import Window
-
     occ = F.row_number().over(
         Window.partitionBy("_file", "line")
         .orderBy(F.monotonically_increasing_id())
@@ -187,9 +175,8 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_parsed_lake(parsed: DataFrame, out_dir: str,
-                      mode: str = "overwrite") -> None:
-    """Day-partitioned parquet lake of parsed messages.
+def write_parsed_lake(parsed: DataFrame, out_dir: str) -> None:
+    """Day-partitioned parquet lake of parsed messages, overwriting out_dir.
 
     Partition key = utc day of the event timestamp ('_rejects' bucket for
     rows without one) — the layout under which day-range queries prune at
@@ -204,7 +191,7 @@ def write_parsed_lake(parsed: DataFrame, out_dir: str,
     (
         parsed.withColumn("day", day)
         .repartition(F.col("day"))
-        .write.mode(mode).partitionBy("day").parquet(out_dir)
+        .write.mode("overwrite").partitionBy("day").parquet(out_dir)
     )
 
 

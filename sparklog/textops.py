@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Ensure CPU-heavy per-row work has at least cluster parallelism.
 
     A small input (one parquet file -> one split) would otherwise pin a
@@ -27,21 +27,13 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     no repartition (and no shuffle) happens there — only undersized local
     inputs get spread.
 
-    partitions: explicit caller control — 0 forces a no-op (a scale
-    caller that knows its scan is already wide skips the file-index
-    lookup entirely), >0 repartitions to exactly that width.
-
-    When partitions is None the gate compares the source's FILE count
-    (df.inputFiles(), a catalog/file-index lookup — unlike the previous
-    df.rdd.getNumPartitions() it does not force physical planning or a
-    Python<->JVM RDD conversion) against defaultParallelism. File count
-    under-estimates splits for multi-split large files, so a wide-file
-    source may get one extra benign repartition — callers at that shape
-    pass partitions=0. Non-file sources (in-memory test frames) report
-    zero files and are always spread: exactly the undersized-local case
-    the helper exists for."""
-    if partitions is not None:
-        return df.repartition(partitions) if partitions > 0 else df
+    The gate compares the source's FILE count (df.inputFiles(), a
+    catalog/file-index lookup — unlike df.rdd.getNumPartitions() it does
+    not force physical planning or a Python<->JVM RDD conversion) against
+    defaultParallelism. File count under-estimates splits for multi-split
+    large files, so a wide-file source may get one extra benign
+    repartition. Non-file sources (in-memory test frames) report zero
+    files; for them the planned partition count decides."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     n_files = len(df.inputFiles())
@@ -461,28 +453,11 @@ def split_assign(docs: DataFrame, text_col: str = "text",
 
 
 def vocab_topk(docs: DataFrame, k: int = 1000,
-               text_col: str = "text",
-               sample_fraction: float = 1.0) -> DataFrame:
+               text_col: str = "text") -> DataFrame:
     """Top-k corpus vocabulary by frequency (ties broken by token text —
     deterministic and engine-portable). orderBy+limit compiles to
     TakeOrderedAndProject: a DISTRIBUTED per-partition top-k merged at
-    the driver — no global sort, no single-task rank.
-
-    sample_fraction < 1 estimates the vocab from a deterministic
-    hash-keyed doc sample (xxhash64(doc_id) mod 1e6 threshold — stable
-    across partitionings/sessions, unlike df.sample): at 100 TB the
-    head-of-the-distribution vocab is already exact from a tiny
-    fraction, so scanning every token for it is waste. Frequencies
-    scale by 1/fraction in expectation; ranks of common tokens are
-    unchanged (test-pinned on the gate corpus)."""
-    if not 0.0 < sample_fraction <= 1.0:
-        raise ValueError(f"sample_fraction must be in (0, 1], got "
-                         f"{sample_fraction}")
-    if sample_fraction < 1.0:
-        docs = docs.filter(
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(1_000_000))
-            < int(sample_fraction * 1_000_000)
-        )
+    the driver — no global sort, no single-task rank."""
     toks = docs.select(
         F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
     ).filter(F.col("tok") != "")
@@ -495,26 +470,16 @@ def vocab_topk(docs: DataFrame, k: int = 1000,
 
 
 def ngram_topk(docs: DataFrame, n: int = 2, k: int = 100,
-               text_col: str = "text",
-               sample_fraction: float = 1.0) -> DataFrame:
+               text_col: str = "text") -> DataFrame:
     """Top-k corpus word n-grams with counts (the corpus-analysis staple
     behind boilerplate discovery and contamination screening). n-grams
     form JVM-side from the filtered word array (transform over a
     sequence — no self-join), then one count aggregation on the n-gram
     key and a distributed TakeOrderedAndProject top-k — the vocab_topk
     shape, so no global sort and no single-task rank. Ties break by
-    n-gram text (deterministic, engine-portable). sample_fraction: the
-    same hash-keyed doc sample as vocab_topk.
+    n-gram text (deterministic, engine-portable).
 
     Output: (ngram STRING, n BIGINT), frequency-descending."""
-    if not 0.0 < sample_fraction <= 1.0:
-        raise ValueError(f"sample_fraction must be in (0, 1], got "
-                         f"{sample_fraction}")
-    if sample_fraction < 1.0:
-        docs = docs.filter(
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(1_000_000))
-            < int(sample_fraction * 1_000_000)
-        )
     words = F.filter(F.split(F.lower(F.col(text_col)), " "),
                      lambda x: x != "")
     grams = F.expr(
@@ -533,19 +498,14 @@ def ngram_topk(docs: DataFrame, n: int = 2, k: int = 100,
 
 
 def oov_rate(docs: DataFrame, k: int = 1000,
-             text_col: str = "text",
-             vocab_sample_fraction: float = 1.0) -> DataFrame:
+             text_col: str = "text") -> DataFrame:
     """Vocabulary-coverage quality signal (the RefinedWeb-style filter):
     per-doc fraction of tokens OUTSIDE the corpus top-k vocabulary.
     Plan: one vocab aggregation (16-byte-ish token keys), then explode ->
     BROADCAST membership join (vocab is tiny) -> one re-agg shuffle on
     doc_id. oov_rate is a raw IEEE division so the DuckDB oracle is
-    bit-identical; docs with no tokens get NULL. vocab_sample_fraction
-    bounds the vocab-estimation scan at scale (see vocab_topk); the
-    per-doc rate pass always reads every doc."""
-    vocab = vocab_topk(docs, k, text_col,
-                       sample_fraction=vocab_sample_fraction
-                       ).withColumn("_in", F.lit(1))
+    bit-identical; docs with no tokens get NULL."""
+    vocab = vocab_topk(docs, k, text_col).withColumn("_in", F.lit(1))
     toks = docs.select(
         "doc_id",
         F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok"),
@@ -649,31 +609,16 @@ def clean_corpus(docs: DataFrame, lang: str = "en", min_chars: int = 100,
     )
 
 
-def profile_docs(docs: DataFrame, text_col: str = "text",
-                 approx: bool = False, rsd: float = 0.05) -> DataFrame:
+def profile_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus profile — the one-row data-quality dashboard a pipeline
     owner checks before and after every stage: doc/empty counts, exact
     char/word totals, length percentiles, distinct-content count. One
-    partial+final aggregation over a pure projection.
-
-    approx=False (default, the oracle-gated path): exact count_distinct
-    on the 16-byte md5 (the only shuffle-heavy term) and exact
-    percentiles. approx=True is the 100 TB dashboard path: HyperLogLog++
-    approx_count_distinct(rsd) — a fixed-size sketch that merges in the
-    partial agg, so the distinct count costs NO extra shuffle volume —
-    and approx_percentile, same column names so dashboards don't care
-    which mode fed them (accuracy pinned within rsd in tests)."""
+    partial+final aggregation over a pure projection: exact
+    count_distinct on the 16-byte md5 (the only shuffle-heavy term) and
+    exact percentiles, so the DuckDB oracle matches bit for bit."""
     words = F.size(F.filter(F.split(F.col(text_col), " "),
                             lambda x: x != ""))
     chars = F.length(text_col)
-    if approx:
-        p50 = F.approx_percentile("_c", F.lit(0.5)).cast("double")
-        p95 = F.approx_percentile("_c", F.lit(0.95)).cast("double")
-        ndist = F.approx_count_distinct("_m", rsd=rsd)
-    else:
-        p50 = F.percentile("_c", F.lit(0.5))
-        p95 = F.percentile("_c", F.lit(0.95))
-        ndist = F.count_distinct(F.col("_m"))
     return docs.select(
         chars.alias("_c"), words.alias("_w"),
         F.md5(F.col(text_col)).alias("_m"),
@@ -683,15 +628,15 @@ def profile_docs(docs: DataFrame, text_col: str = "text",
         .alias("n_empty"),
         F.sum("_c").cast("long").alias("total_chars"),
         F.sum("_w").cast("long").alias("total_words"),
-        F.round(p50, 4).alias("p50_chars"),
-        F.round(p95, 4).alias("p95_chars"),
-        ndist.cast("long").alias("n_distinct_texts"),
+        F.round(F.percentile("_c", F.lit(0.5)), 4).alias("p50_chars"),
+        F.round(F.percentile("_c", F.lit(0.95)), 4).alias("p95_chars"),
+        F.count_distinct(F.col("_m")).cast("long")
+        .alias("n_distinct_texts"),
     )
 
 
 def contamination(docs: DataFrame, eval_docs: DataFrame,
-                  k: int = 5, text_col: str = "text",
-                  broadcast: bool = True) -> DataFrame:
+                  k: int = 5, text_col: str = "text") -> DataFrame:
     """Train-eval contamination check — the decontamination gate every
     serious pipeline runs before training: for each candidate doc, the
     fraction of its DISTINCT k-shingles that appear anywhere in the
@@ -699,10 +644,10 @@ def contamination(docs: DataFrame, eval_docs: DataFrame,
     is the caller's policy; this op computes the exact rate).
 
     Plan: eval shingles -> distinct; candidate shingles -> explode ->
-    membership join -> one re-agg on doc_id. broadcast=True (default)
-    hints the membership side for benchmark-sized eval sets (thousands
-    of docs -> the distinct shingle set fits every executor);
-    broadcast=False drops the hint so a terabyte-scale eval suite
+    membership join -> one re-agg on doc_id. The join carries no hint:
+    the planner broadcasts the membership side when its measured size
+    is under autoBroadcastJoinThreshold (statically for a file source,
+    via AQE at run time otherwise), and a terabyte-scale eval suite
     (millions of distinct shingles) shuffles both sides on the shingle
     key instead of OOMing the driver at broadcast time — same rows
     either way (test-pinned). Rate is a raw IEEE division of exact
@@ -713,9 +658,8 @@ def contamination(docs: DataFrame, eval_docs: DataFrame,
     ev = eval_docs.select(
         F.explode(_shingles(text_col, k)).alias("sh")
     ).distinct().withColumn("_hit", F.lit(1))
-    memb = F.broadcast(ev) if broadcast else ev
     per = (
-        tr.join(memb, "sh", "left")
+        tr.join(ev, "sh", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_shingles"),

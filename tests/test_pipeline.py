@@ -166,7 +166,10 @@ def test_sd_lang_matches_documents(spark, parsed):
 
 def test_sessionize_batch_merges_across_buckets(spark):
     """Sessions spanning bucket edges — including a chain across an empty
-    middle bucket — merge back exactly; interior sessions are untouched."""
+    middle bucket — merge back exactly; interior sessions are untouched.
+    Hosts d/e/f pin the strict `>` of the gap rule in both the kernel
+    and the boundary merge: a gap of exactly gap_seconds merges, one
+    second more splits."""
     from sparklog import pipeline as PL
 
     rows = []
@@ -179,6 +182,12 @@ def test_sessionize_batch_merges_across_buckets(spark):
     rows += [("b", 86340), ("b", 87000), ("b", 88000)]
     # host C: single event
     rows += [("c", 1000)]
+    # gap of EXACTLY gap_seconds (1800) across the midnight edge: merges
+    rows += [("d", 85500), ("d", 87300)]
+    # gap_seconds + 1 across the same edge: splits
+    rows += [("e", 85500), ("e", 87301)]
+    # the same pair of gaps inside one bucket: 1800 merges, 1801 splits
+    rows += [("f", 10000), ("f", 11800), ("f", 13601)]
     parsed = spark.createDataFrame(
         [(h, t, None) for h, t in rows],
         "hostname STRING, timestamp LONG, parse_error STRING",
@@ -190,6 +199,11 @@ def test_sessionize_batch_merges_across_buckets(spark):
         ("a", 136400, 136460, 2),
         ("b", 86340, 88000, 3),
         ("c", 1000, 1000, 1),
+        ("d", 85500, 87300, 2),
+        ("e", 85500, 85500, 1),
+        ("e", 87301, 87301, 1),
+        ("f", 10000, 11800, 2),
+        ("f", 13601, 13601, 1),
     }
 
 

@@ -138,7 +138,7 @@ def test_ann_scale_paths_prune_hard_on_clustered_data(spark):
              for r in ANN.brute_force_topk(emb, n_queries=6, k=5).collect()}
     ivf = {(r["query_id"], r["neighbor_id"])
            for r in ANN.ivf_topk(emb, n_queries=6, k=5, n_centroids=16,
-                                 n_probe=2, quantizer="sample").collect()}
+                                 n_probe=2).collect()}
     lsh = {(r["query_id"], r["neighbor_id"])
            for r in ANN.lsh_topk(emb, n_queries=6, k=5, n_bits=6,
                                  n_tables=4, multiprobe=1).collect()}
@@ -170,27 +170,6 @@ def test_lsh_measured_candidate_fraction_at_bench_sf(spark):
                          n_tables=ANN.LSH_TABLES, multiprobe=1).count()
     frac = cand / (n_q * n)
     assert frac <= 0.05, f"candidate fraction {frac:.3f} exceeds 5%"
-
-
-def test_ivf_train_fraction_is_bounded():
-    """KMeans must never iterate over the full corpus (r2 critique:
-    train_fraction defaulted to 1.0). The derived fraction caps the
-    training set at ~IVF_MAX_TRAIN_ROWS regardless of corpus size."""
-    assert ANN.ivf_train_fraction(500) == 1.0
-    for n in (10**6, 10**9, 10**12):
-        f = ANN.ivf_train_fraction(n)
-        assert f * n <= ANN.IVF_MAX_TRAIN_ROWS * 1.001, (n, f)
-
-
-def test_ivf_kmeans_trains_on_bounded_sample(spark):
-    """End-to-end check that the default (train_fraction=None) path feeds
-    KMeans a bounded row count: the sampled training set for a corpus 4x
-    over the cap stays within ~10% of IVF_MAX_TRAIN_ROWS."""
-    n = ANN.IVF_MAX_TRAIN_ROWS * 4
-    corpus = spark.range(n).select(F.col("id").alias("vec_id"))
-    frac = ANN.ivf_train_fraction(n)
-    got = corpus.sample(fraction=frac, seed=7).count()
-    assert got <= ANN.IVF_MAX_TRAIN_ROWS * 1.1
 
 
 def test_minhash_lsh_one_shuffle_shape(spark, toy_docs):
@@ -445,32 +424,6 @@ def test_repetition_score_known_values(spark):
     assert "Exchange" not in plan
 
 
-def test_vocab_topk_sampled_is_stable_on_gate_corpus(spark):
-    """The 100-TB scale knob (vocab from a hash-keyed doc sample) must
-    reproduce the full-scan vocab on the gate corpus: the head of a
-    token-frequency distribution is exact from a fraction of the docs.
-    Also checks the sample filter actually drops docs (deterministic
-    xxhash64 threshold, not df.sample)."""
-    from pyspark.sql import functions as F
-    from sparklog.synth import load_documents
-
-    docs = load_documents(spark, "/root/testdata/sf0.01")
-    n_sampled = docs.filter(
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(1_000_000)) < 250_000
-    ).count()
-    assert 0 < n_sampled < docs.count()
-
-    full = [r["tok"] for r in TX.vocab_topk(docs, k=1000).collect()]
-    samp = [r["tok"] for r in
-            TX.vocab_topk(docs, k=1000, sample_fraction=0.25).collect()]
-    assert set(samp) == set(full)
-    assert len(set(full[:30]) & set(samp[:30])) >= 28
-
-    import pytest
-    with pytest.raises(ValueError):
-        TX.vocab_topk(docs, sample_fraction=0.0)
-
-
 def test_salted_topk_equals_naive_window_on_skewed_key(spark):
     """salted_topk must return EXACTLY the naive hot-window result (rows
     AND ranks) on a Zipf-ish input: one domain with 500 docs, a few tiny
@@ -517,7 +470,9 @@ def test_salted_topk_equals_naive_window_on_skewed_key(spark):
 def test_contamination_known_rates(spark):
     """Exact rates on hand-built overlap: a verbatim eval copy is 1.0,
     disjoint text 0.0, partial overlap counts shared 5-shingles, short
-    docs get NULL, and the membership side broadcasts."""
+    docs get NULL, and the membership side broadcasts. The join has no
+    hint, so the broadcast is AQE's run-time choice from the measured
+    size: the plan is read after collect(), i.e. the final adaptive plan."""
     ev = spark.createDataFrame(
         [(100, "abcdefgh")], "doc_id LONG, text STRING"
     )
@@ -530,15 +485,15 @@ def test_contamination_known_rates(spark):
         ],
         "doc_id LONG, text STRING",
     )
-    out = {r["doc_id"]: r for r in TX.contamination(tr, ev).collect()}
+    df = TX.contamination(tr, ev)
+    out = {r["doc_id"]: r for r in df.collect()}
     assert out[0]["contamination_rate"] == 1.0
     assert out[1]["contamination_rate"] == 0.0
     assert out[2]["n_shingles"] == 5 and out[2]["n_hits"] == 1
     assert out[2]["contamination_rate"] == 0.2
     assert out[3]["n_shingles"] == 0
     assert out[3]["contamination_rate"] is None
-    plan = (TX.contamination(tr, ev)._jdf.queryExecution()
-            .executedPlan().toString())
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
 
@@ -764,10 +719,10 @@ def test_oov_rate_toy_and_plan(spark):
 
 
 def test_contamination_broadcast_off_same_rows_no_bcast_plan(spark):
-    """broadcast=False is the terabyte-eval path: the membership join
-    must shuffle on the shingle key (no BroadcastExchange anywhere in
-    the plan once auto-broadcast is disabled) and return the exact same
-    rows as the broadcast path."""
+    """The terabyte-eval shape: with auto-broadcast disabled the
+    membership join must shuffle on the shingle key (no BroadcastExchange
+    anywhere in the plan) and return the exact same rows as the
+    broadcast plan."""
     ev = spark.createDataFrame(
         [(100, "abcdefgh")], "doc_id LONG, text STRING"
     )
@@ -781,7 +736,7 @@ def test_contamination_broadcast_off_same_rows_no_bcast_plan(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = TX.contamination(tr, ev, broadcast=False)
+        out = TX.contamination(tr, ev)
         got = sorted(out.collect(), key=lambda r: r["doc_id"])
         plan = (out._jdf.queryExecution().executedPlan().toString()
                 .split("== Initial Plan ==")[0])
@@ -843,30 +798,6 @@ def test_capped_sample_heterogeneous_caps_prune_per_group(spark):
     by_dom = {r["domain"]: r["count"] for r in surv}
     for d in range(4):
         assert by_dom[f"t{d}.com"] <= 16 * 3
-
-
-def test_profile_docs_approx_within_rsd(spark):
-    """approx=True (the 100 TB dashboard path) must agree with the
-    exact profile: counts/sums identical (they stay exact), HLL++
-    distinct count within ~3*rsd, sketched percentiles in-range."""
-    docs = spark.createDataFrame(
-        [(i, ("word " * (1 + i % 37)).strip()) for i in range(500)]
-        + [(1000 + i, "") for i in range(7)],
-        "doc_id LONG, text STRING",
-    )
-    exact = TX.profile_docs(docs).collect()[0]
-    approx = TX.profile_docs(docs, approx=True, rsd=0.05).collect()[0]
-    assert approx["n_docs"] == exact["n_docs"]
-    assert approx["n_empty"] == exact["n_empty"]
-    assert approx["total_chars"] == exact["total_chars"]
-    assert approx["total_words"] == exact["total_words"]
-    rel = abs(approx["n_distinct_texts"] - exact["n_distinct_texts"]) \
-        / exact["n_distinct_texts"]
-    assert rel <= 0.15
-    assert 0 <= approx["p50_chars"] <= approx["p95_chars"] <= 37 * 5
-    # same column names/order either way: dashboards don't care
-    assert (TX.profile_docs(docs, approx=True).columns
-            == TX.profile_docs(docs).columns)
 
 
 def test_pii_scrub_counts_match_emitted_placeholders(spark):
@@ -1280,10 +1211,6 @@ def test_ngram_topk_known_counts_and_plan(spark):
     plan = TX.ngram_topk(docs)._jdf.queryExecution().executedPlan() \
         .toString()
     assert "TakeOrderedAndProject" in plan
-    import pytest
-
-    with pytest.raises(ValueError):
-        TX.ngram_topk(docs, sample_fraction=0.0)
 
 
 def test_spread_nonfile_frames_use_partition_count(spark):
