@@ -142,10 +142,9 @@ def q_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_routed_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conservation law: ok + rejects == input rows, per sink."""
     parsed = _parsed(spark, sf_dir, corrupt=True)
-    sink = F.coalesce(F.col("severity_name"), F.lit("_rejects"))
     return (
         PL.enrich(parsed, spark, with_lang=False)
-        .groupBy(sink.alias("sink"))
+        .groupBy(PL.sink_name().alias("sink"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
 

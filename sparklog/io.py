@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparklog.udf import parse_df
-
 
 def read_syslog_text(spark: SparkSession, path: str) -> DataFrame:
     """Newline-delimited raw RFC 5424 files -> (doc_id, line).
@@ -99,11 +97,6 @@ def read_syslog_csv(spark: SparkSession, path: str, line_field: str = "raw",
         F.col(id_field).cast("long").alias("doc_id"),
         F.col(line_field).alias("line"),
     )
-
-
-def parse_source(lines: DataFrame) -> DataFrame:
-    """Any (doc_id, line) source -> the canonical parsed schema."""
-    return parse_df(lines)
 
 
 # --------------------------------------------------------------------------

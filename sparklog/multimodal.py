@@ -270,13 +270,20 @@ def image_features(images: DataFrame, binary_col: str = "img") -> DataFrame:
     return images.select("doc_id", binary_col).mapInPandas(run, IMAGE_SCHEMA)
 
 
+RESIZE_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("width", T.IntegerType()),
+    T.StructField("height", T.IntegerType()),
+    T.StructField("resized", T.BinaryType()),
+])
+
+
 def resize_image(images: DataFrame, width: int, height: int,
                  binary_col: str = "img") -> DataFrame:
     """REAL decode -> nearest-neighbor resize -> re-encode (P6). The
     resize kernel is pure numpy index math; gray inputs are expanded to
-    RGB so the output format is uniform. Same plumbing shape as
-    resize_binary (1 row in, 1 row out), with a real codec in the
-    loop."""
+    RGB so the output format is uniform. 1 row in, 1 row out
+    (RESIZE_SCHEMA)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -386,43 +393,6 @@ def extract_meta(pages: DataFrame, binary_col: str = "html") -> DataFrame:
         "doc_id", binary_col,
         F.xxhash64(F.col(binary_col)).alias("content_hash"),
     ).mapInPandas(run, META_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("resized", T.BinaryType()),
-])
-
-
-def resize_binary(pages: DataFrame, width: int, height: int,
-                  binary_col: str = "html") -> DataFrame:
-    """Decode -> resize -> re-encode plumbing (1 row in, 1 row out).
-
-    The decode/re-encode kernel is the stub (decode_binary); the
-    deterministic fake keeps output bytes a pure function of input bytes
-    so lineage/dedup over resized payloads stays testable. Swapping in a
-    real codec changes only the inner lambda."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        header = f"RSZ:{width}x{height}:".encode()
-        for pdf in batches:
-            payloads = pdf[binary_col]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "width": np.full(len(pdf), width, dtype="int32"),
-                "height": np.full(len(pdf), height, dtype="int32"),
-                # fake "resized" bytes: header + content hash + truncated
-                # payload — deterministic, size-bounded like a real resize
-                "resized": payloads.map(
-                    lambda b: header
-                    + _fnv1a_bytes(b or b"").to_bytes(8, "big")
-                    + (b or b"")[: width * height // 64]
-                ),
-            })
-
-    return pages.select("doc_id", binary_col).mapInPandas(run, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType([

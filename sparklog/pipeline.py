@@ -31,6 +31,12 @@ def split_rejects(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
 
 
+def sink_name() -> F.Column:
+    """The routing rule: an enriched row goes to the sink named by its
+    severity; a row with none (a parse error) goes to '_rejects'."""
+    return F.coalesce(F.col("severity_name"), F.lit("_rejects"))
+
+
 def sd_value(col: str, sd_id: str, param: str) -> F.Column:
     """Null-safe sd[sd_id][param] lookup (StructuredData::find_tuple,
     message.rs:113-128)."""
@@ -207,10 +213,13 @@ def write_bucketed(df: DataFrame, table: str, key: str = "doc_id",
 
 
 def route_write(enriched: DataFrame, out_dir: str) -> dict[str, int]:
-    """Fan-out to per-severity sinks in ONE write pass; rejects get their
-    own sink. Per-sink row counts come from df.observe() metrics attached
-    to the SAME write job — no second scan of the output (at 100 TB a
-    read-back count is a full extra pass over everything just written).
+    """Fan-out to the sink_name() sinks in ONE write pass that overwrites
+    out_dir/sink=<name>/. Per-sink row counts come from df.observe()
+    metrics attached to the SAME write job — no second scan of the output
+    (at 100 TB a read-back count is a full extra pass over everything
+    just written). The salt hashes doc_id, so the input must carry it;
+    streaming.start_routed_stream applies the same sink rule to a line
+    stream, which has no doc_id, with its own unsalted overwrite.
 
     Routed-row equality (BASELINE.md) is asserted by tests/test_pipeline.py
     via anti-joins of each sink against the severity filter.
@@ -218,8 +227,7 @@ def route_write(enriched: DataFrame, out_dir: str) -> dict[str, int]:
     from pyspark.sql import Observation
 
     sink_names = list(SEVERITY_NAMES) + ["_rejects"]
-    sink_key = F.coalesce(F.col("severity_name"), F.lit("_rejects"))
-    df = enriched.withColumn("sink", sink_key)
+    df = enriched.withColumn("sink", sink_name())
     obs = Observation()
     df = df.observe(
         obs,

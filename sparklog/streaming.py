@@ -1,11 +1,24 @@
 """Structured Streaming analog of the reference's UDP-server doc example
 (lib.rs:18-24: recv -> decode -> parse -> use fields).
 
-The batch operators are reused verbatim inside foreachBatch, so streaming
-and batch share one code path (SURVEY.md §3 entry point 3). A file-source
-variant is testable hermetically; in production the source would be
-Kafka/socket with the same downstream graph plus a watermark on event_ts
-for the windowed aggregate.
+What the stream shares with batch, by calling it rather than copying it:
+the parse (udf.parse_df), enrichment (pipeline.enrich), the sink rule
+(pipeline.sink_name), the PII chain and cleaning gate
+(textops.pii_scrub_total, with_lang_pred, clean_gate) and the session
+events and gap (pipeline._session_events, SESSION_GAP_SECONDS).
+
+What differs, and why:
+  - the routed sink skips route_write's salted Exchange, whose salt
+    hashes doc_id (a line stream has none), and each micro-batch
+    overwrites its own out_dir/batch_id=<id>/ so a replayed batch
+    replaces its output;
+  - stateful steps (dedup, sessions, windows) are bounded by a
+    watermark instead of running over the whole input;
+  - clean_stream filters without textops.materialized_filter's barrier,
+    because monotonically_increasing_id is illegal in streaming.
+
+A file source is testable hermetically; in production the source would
+be Kafka/socket with the same downstream graph.
 """
 
 from __future__ import annotations
@@ -14,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparklog import pipeline as PL
+from sparklog import textops
 from sparklog.udf import parse_df
 
 
@@ -22,11 +36,6 @@ def read_line_stream(spark: SparkSession, in_dir: str) -> DataFrame:
     return spark.readStream.format("text").load(in_dir).withColumnRenamed(
         "value", "line"
     )
-
-
-def parse_stream(lines: DataFrame) -> DataFrame:
-    """Streaming parse: identical UDF, micro-batch Arrow batches."""
-    return parse_df(lines)
 
 
 def windowed_counts(parsed: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -74,32 +83,13 @@ def clean_stream(docs: DataFrame, lang: str = "en", min_chars: int = 100,
     horizon is the window in which a re-crawl/retransmit can arrive.
 
     Input must carry (doc_id, text, event_ts TIMESTAMP). Output: one row
-    per surviving doc (doc_id, text_md5, n_pii)."""
-    from sparklog import textops
-
-    # scrub inline (a self-join to re-attach event_ts would be a
-    # stream-stream join; the signals are projections, so just keep the
-    # column) — same patterns/order AND sequential counting as
-    # textops.pii_scrub (each pattern counted on the text after the
-    # prior replacements, so n_pii == placeholders emitted)
-    t = F.col("text")
-    t1 = F.regexp_replace(t, textops.PII_EMAIL_RE, "<EMAIL>")
-    t2 = F.regexp_replace(t1, textops.PII_IPV4_RE, "<IP>")
-    clean = F.regexp_replace(t2, textops.PII_PHONE_RE, "<PHONE>")
-    n_pii = (
-        F.regexp_count(t, F.lit(textops.PII_EMAIL_RE))
-        + F.regexp_count(t1, F.lit(textops.PII_IPV4_RE))
-        + F.regexp_count(t2, F.lit(textops.PII_PHONE_RE))
-    ).cast("long")
-    s = docs.select(
-        "doc_id", "event_ts", clean.alias("clean_text"),
-        n_pii.alias("n_pii"),
-    )
+    per surviving doc (doc_id, text_md5, n_pii). The scrub and gate are
+    textops.pii_scrub_total and textops.clean_gate, as in
+    clean_corpus_full."""
+    s = textops.pii_scrub_total(docs, "doc_id", "event_ts")
     scored = textops.with_lang_pred(s, text_col="clean_text")
     f = scored.filter(
-        (F.length("clean_text") >= min_chars)
-        & (F.size(F.split(F.col("clean_text"), " ")) >= min_words)
-        & (F.col("pred_lang") == lang)
+        textops.clean_gate("clean_text", lang, min_chars, min_words)
     ).select(
         "doc_id", "event_ts", "n_pii",
         F.md5(F.col("clean_text")).alias("text_md5"),
@@ -154,21 +144,21 @@ def sessionize_stream_native(parsed: DataFrame,
 
 def start_routed_stream(spark: SparkSession, in_dir: str, out_dir: str,
                         checkpoint_dir: str, once: bool = True):
-    """readStream -> foreachBatch(parse -> enrich -> per-severity sinks).
-
-    foreachBatch reuses the exact batch operators; availableNow drains all
-    pending input then stops (hermetic for tests; drop once=False to run
-    continuously).
+    """readStream -> foreachBatch(parse -> enrich -> pipeline.sink_name
+    sinks). Micro-batch <id> overwrites out_dir/batch_id=<id>/sink=<name>/,
+    the way run_pipeline overwrites chunk=<day>/: a batch replayed after a
+    crash between its write and its commit replaces its own output, so
+    reading out_dir yields every line once, with batch_id and sink as
+    partition columns. availableNow drains all pending input then stops
+    (hermetic for tests; once=False runs continuously).
     """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        parsed = parse_df(batch_df)
-        enriched = PL.enrich(parsed, spark, with_lang=False)
-        sink = F.coalesce(F.col("severity_name"), F.lit("_rejects"))
+        enriched = PL.enrich(parse_df(batch_df), spark, with_lang=False)
         (
-            enriched.withColumn("sink", sink)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append").partitionBy("sink").parquet(out_dir)
+            enriched.withColumn("sink", PL.sink_name())
+            .write.mode("overwrite").partitionBy("sink")
+            .parquet(f"{out_dir}/batch_id={batch_id}")
         )
 
     writer = (

@@ -141,24 +141,41 @@ PII_IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 PII_PHONE_RE = r"\b\d{3}-\d{3}-\d{4}\b"
 
 
-def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """PII scrubbing (the C4/RefinedWeb release gate): replace emails,
-    IPv4 addresses, and phone numbers with typed placeholder tokens and
-    report per-doc match counts (n_emails + n_ips + n_phones ==
-    placeholders emitted, by construction — see pattern-order note
-    above). Pure JVM projection — regexp_replace + regexp_count, no
-    shuffle, no Python; at 100 TB this is a map-only pass that
-    pipelines into whatever scan feeds it."""
+def _pii_columns(text_col: str) -> list[F.Column]:
+    """The PII chain as projections (clean_text, n_emails, n_ips,
+    n_phones) in the fixed order above, each count taken on the text
+    after the prior replacements."""
     t = F.col(text_col)
     t1 = F.regexp_replace(t, PII_EMAIL_RE, "<EMAIL>")
     t2 = F.regexp_replace(t1, PII_IPV4_RE, "<IP>")
-    return docs.select(
-        "doc_id",
+    return [
         F.regexp_replace(t2, PII_PHONE_RE, "<PHONE>").alias("clean_text"),
         F.regexp_count(t, F.lit(PII_EMAIL_RE)).cast("long").alias("n_emails"),
         F.regexp_count(t1, F.lit(PII_IPV4_RE)).cast("long").alias("n_ips"),
         F.regexp_count(t2, F.lit(PII_PHONE_RE)).cast("long")
         .alias("n_phones"),
+    ]
+
+
+def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """PII scrubbing (the C4/RefinedWeb release gate): replace emails,
+    IPv4 addresses, and phone numbers with typed placeholder tokens and
+    report per-doc match counts (n_emails + n_ips + n_phones ==
+    placeholders emitted, by construction — see pattern-order note
+    above). Pure JVM projection of _pii_columns — regexp_replace +
+    regexp_count, no shuffle, no Python; at 100 TB this is a map-only
+    pass that pipelines into whatever scan feeds it."""
+    return docs.select("doc_id", *_pii_columns(text_col))
+
+
+def pii_scrub_total(docs: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, clean_text, n_pii) over a `text` column: the scrubbed text
+    and its total placeholder count, the input of the cleaning gate in
+    clean_corpus_full and streaming.clean_stream."""
+    return docs.select(*keep, *_pii_columns("text")).select(
+        *keep, "clean_text",
+        (F.col("n_emails") + F.col("n_ips") + F.col("n_phones"))
+        .cast("long").alias("n_pii"),
     )
 
 
@@ -579,6 +596,18 @@ def lang_id(docs: DataFrame) -> DataFrame:
     )
 
 
+def clean_gate(text_col: str, lang: str, min_chars: int,
+               min_words: int) -> F.Column:
+    """The per-doc quality and language gate of every cleaning pass:
+    at least min_chars characters, at least min_words space-split words,
+    and with_lang_pred's pred_lang equal to lang."""
+    return (
+        (F.length(text_col) >= min_chars)
+        & (F.size(F.split(F.col(text_col), " ")) >= min_words)
+        & (F.col("pred_lang") == lang)
+    )
+
+
 def clean_corpus(docs: DataFrame, lang: str = "en", min_chars: int = 100,
                  min_words: int = 20) -> DataFrame:
     """The C4-style cleaning pass a training-data pipeline actually runs:
@@ -594,10 +623,7 @@ def clean_corpus(docs: DataFrame, lang: str = "en", min_chars: int = 100,
     # materialized_filter: a plain filter inlines the marker-word
     # pred_lang scoring into the condition and re-runs it per row
     f = materialized_filter(
-        scored,
-        (F.length("text") >= min_chars)
-        & (F.size(F.split(F.col("text"), " ")) >= min_words)
-        & (F.col("pred_lang") == lang),
+        scored, clean_gate("text", lang, min_chars, min_words)
     )
     return (
         f.groupBy(F.md5(F.col("text")).alias("text_md5"))
@@ -1116,12 +1142,7 @@ def clean_corpus_full(docs: DataFrame, lang: str = "en",
     Output: (doc_id, clean_md5, n_copies, n_pii) per surviving
     canonical doc — n_pii = scrubbed matches (identical across exact
     copies by construction)."""
-    s = pii_scrub(docs)
-    s = s.withColumn(
-        "n_pii",
-        (F.col("n_emails") + F.col("n_ips") + F.col("n_phones"))
-        .cast("long"),
-    ).select("doc_id", "clean_text", "n_pii")
+    s = pii_scrub_total(docs, "doc_id")
     scored = with_lang_pred(s, text_col="clean_text")
     words = F.filter(F.split(F.lower(F.col("clean_text")), " "),
                      lambda x: x != "")
@@ -1134,9 +1155,7 @@ def clean_corpus_full(docs: DataFrame, lang: str = "en",
     # elimination); the barrier evaluates scrub/lang/repetition once
     f = materialized_filter(
         scored,
-        (F.length("clean_text") >= min_chars)
-        & (F.size(F.split(F.col("clean_text"), " ")) >= min_words)
-        & (F.col("pred_lang") == lang)
+        clean_gate("clean_text", lang, min_chars, min_words)
         & (F.size("_wf") > 0)
         & (top_frac <= max_top_word_frac),
     )

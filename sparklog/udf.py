@@ -9,7 +9,7 @@ stays in whole-stage-codegen'd JVM expressions.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparklog.parse import parse_lines
@@ -20,11 +20,6 @@ from sparklog.schema import PARSED_SCHEMA
 def parse_syslog_udf(lines: pd.Series) -> pd.DataFrame:
     """Vectorized RFC5424 parse: Series[str] -> DataFrame[PARSED_SCHEMA]."""
     return parse_lines(lines)
-
-
-def parse_syslog(col) -> Column:
-    """Column expression: raw line -> parsed struct."""
-    return parse_syslog_udf(col)
 
 
 def register_sql(spark: SparkSession, name: str = "parse_syslog") -> None:

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from sparklog import io as IO
 from sparklog.parse import _parse_slow
+from sparklog.udf import parse_df
 
 LINES = [
     '<78>1 2016-01-15T00:04:01+00:00 host1 CROND 10391 - '
@@ -28,7 +29,7 @@ def test_read_syslog_text_roundtrip(spark, tmp_path):
     raw.mkdir()
     (raw / "part-0.log").write_text("\n".join(LINES) + "\n")
     src = IO.read_syslog_text(spark, str(raw))
-    parsed = IO.parse_source(src)
+    parsed = parse_df(src)
     got = {r["msg"] for r in parsed.collect()}
     assert {e["msg"] for e in _expected()} == got
     assert parsed.filter(F.col("parse_error").isNotNull()).count() == 1
@@ -39,7 +40,7 @@ def test_read_syslog_json_envelope(spark, tmp_path):
     p.write_text("\n".join(
         json.dumps({"id": i, "raw": l}) for i, l in enumerate(LINES)
     ))
-    parsed = IO.parse_source(IO.read_syslog_json(spark, str(p)))
+    parsed = parse_df(IO.read_syslog_json(spark, str(p)))
     rows = {r["doc_id"]: r for r in parsed.collect()}
     assert rows[0]["hostname"] == "host1" and rows[0]["procid_pid"] == 10391
     assert rows[2]["parse_error"] is not None
@@ -51,7 +52,7 @@ def test_read_syslog_csv_envelope(spark, tmp_path):
         f'{i},"{l.replace(chr(34), chr(34) * 2)}"' for i, l in enumerate(LINES)
     ]
     p.write_text("\n".join(lines))
-    parsed = IO.parse_source(IO.read_syslog_csv(spark, str(p)))
+    parsed = parse_df(IO.read_syslog_csv(spark, str(p)))
     rows = {r["doc_id"]: r for r in parsed.collect()}
     # CSV quote-escaping must not corrupt the SD param quotes
     assert rows[0]["sd"]["meta"]["sequenceId"] == "29"

@@ -10,32 +10,61 @@ from pyspark.sql import functions as F
 from sparklog import multimodal as MM
 from sparklog import streaming as ST
 from sparklog import synth
+from sparklog.udf import parse_df
 
 from conftest import SF_SMOKE
 
 
-def test_streaming_routes_like_batch(spark, tmp_path):
-    """File-stream in, foreachBatch parse+route out — totals match batch."""
+def _routed_stream(spark, tmp_path):
+    """Write the corrupt sf0.001 lines as text files, drain them once
+    through start_routed_stream; returns (lines, run) so a test can
+    re-run the same query on the same checkpoint."""
     in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
     os.makedirs(in_dir)
     lines = synth.lines_df(spark, SF_SMOKE, corrupt=True)
     # write input as text files; syslog lines may contain no newlines here
     # (documents corpus has none) so text-source framing is safe
     lines.select("line").coalesce(2).write.mode("overwrite").text(in_dir)
 
-    q = ST.start_routed_stream(spark, in_dir, out_dir, ck, once=True)
-    q.awaitTermination(300)
-    back = spark.read.parquet(out_dir)
-    assert back.count() == lines.count()
-    sinks = {r["sink"] for r in back.select("sink").distinct().collect()}
-    assert "_rejects" in sinks and len(sinks) > 3
+    def run():
+        q = ST.start_routed_stream(spark, in_dir, str(tmp_path / "out"),
+                                   str(tmp_path / "ck"), once=True)
+        q.awaitTermination(300)
+
+    run()
+    return lines, run
+
+
+def test_streaming_routes_like_batch(spark, tmp_path):
+    """File-stream in, foreachBatch parse+route out: every sink holds the
+    rows route_write observes for it on the same lines."""
+    from sparklog import pipeline as PL
+
+    lines, _ = _routed_stream(spark, tmp_path)
+    back = spark.read.parquet(str(tmp_path / "out"))
+    stream = {r["sink"]: r["count"]
+              for r in back.groupBy("sink").count().collect()}
+    batch = PL.route_write(PL.enrich(parse_df(lines), spark, with_lang=False),
+                           str(tmp_path / "batch"))
+    assert stream == batch
+    assert sum(stream.values()) == lines.count()
+    assert "_rejects" in stream and len(stream) > 3
+
+
+def test_routed_stream_replay_writes_once(spark, tmp_path):
+    """A crash after a micro-batch's sink write but before its commit
+    makes the restarted query replay that batch; the replay replaces the
+    batch's output instead of adding a second copy."""
+    lines, run = _routed_stream(spark, tmp_path)
+    commits = tmp_path / "ck" / "commits"
+    for name in os.listdir(commits):
+        os.remove(commits / name)
+    run()
+    assert spark.read.parquet(str(tmp_path / "out")).count() == lines.count()
 
 
 def test_streaming_windowed_counts_schema(spark):
     # windowed agg plan compiles against a static frame with same schema
-    from sparklog.udf import parse_df
 
     parsed = parse_df(synth.lines_df(spark, SF_SMOKE))
     win = (
@@ -67,7 +96,7 @@ def test_streaming_watermark_drops_late_data(spark, tmp_path):
         f.write(line("2016-01-10T12:05:00Z") + "\n")
 
     out_dir = str(tmp_path / "out")
-    parsed = ST.parse_stream(ST.read_line_stream(spark, in_dir))
+    parsed = parse_df(ST.read_line_stream(spark, in_dir))
     win = ST.windowed_counts(parsed, watermark="10 minutes")
 
     def run_once():
@@ -107,7 +136,6 @@ def test_stateful_sessionize_hot_host_matches_batch(spark, tmp_path):
     state key) must emit exactly the batch operator's sessions once the
     watermark has passed them; sessions still open stay in state."""
     from sparklog import pipeline as PL
-    from sparklog.udf import parse_df
 
     in_dir = str(tmp_path / "in")
     ck = str(tmp_path / "ck")
@@ -132,7 +160,7 @@ def test_stateful_sessionize_hot_host_matches_batch(spark, tmp_path):
     lines1 += [line("edge", base + t) for t in (0, 1800, 1800 + 1801)]
 
     def run_once():
-        parsed = ST.parse_stream(ST.read_line_stream(spark, in_dir))
+        parsed = parse_df(ST.read_line_stream(spark, in_dir))
         q = (
             ST.sessionize_stream_native(parsed, gap_seconds=1800,
                                         watermark="2 hours")
@@ -182,7 +210,7 @@ def test_streaming_native_session_window(spark, tmp_path):
         return f"<14>1 {ts} hostA app - - - m"
 
     def run_once():
-        parsed = ST.parse_stream(ST.read_line_stream(spark, in_dir))
+        parsed = parse_df(ST.read_line_stream(spark, in_dir))
         q = (
             ST.sessionize_stream_native(parsed, gap_seconds=1800,
                                         watermark="2 hours")
@@ -331,23 +359,6 @@ def test_audio_features_through_spark(spark):
         assert r["peak"] == round(float(np.max(np.abs(x))), 4)
 
 
-def test_resize_plumbing_deterministic(spark):
-    from sparklog import multimodal as MM
-    from sparklog import synth
-
-    pages = synth.pages_df(spark, "/root/testdata/sf0.001").limit(20)
-    out = MM.resize_binary(pages, 640, 480)
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert len(rows) == 20
-    r0 = next(iter(rows.values()))
-    assert r0["width"] == 640 and r0["height"] == 480
-    assert bytes(r0["resized"]).startswith(b"RSZ:640x480:")
-    # repartitioning must not change any output byte
-    again = {r["doc_id"]: bytes(r["resized"])
-             for r in MM.resize_binary(pages.repartition(7), 640, 480).collect()}
-    assert {k: bytes(v["resized"]) for k, v in rows.items()} == again
-
-
 def test_frame_sampling_explodes_rows(spark):
     from sparklog import multimodal as MM
 
@@ -393,7 +404,7 @@ def test_dedup_stream_suppresses_cross_batch_retransmits(spark, tmp_path):
         return f"<14>1 {ts} hostA app - - - {msg}"
 
     def run_once():
-        parsed = ST.parse_stream(ST.read_line_stream(spark, in_dir))
+        parsed = parse_df(ST.read_line_stream(spark, in_dir))
         q = (
             ST.dedup_stream(parsed, watermark="1 hour")
             .select("hostname", "timestamp", "msg")
