@@ -2,8 +2,7 @@
 
 Unit of work = one ``warc_day`` partition of the pages table (the Iceberg
 ``days(warc_ts)`` partition spec): each chunk's scan is PARTITION-PRUNED to
-that day's files, so resuming never rescans completed days. A hash-based
-chunk key (``hash_chunk_col``) remains available for unpartitioned inputs.
+that day's files, so resuming never rescans completed days.
 
 Protocol:
   1. planned chunks = the table's partition values; done = manifest entries.
@@ -13,7 +12,8 @@ Protocol:
      ATOMICALLY (tmp file + rename) — a crash mid-chunk leaves no entry, so
      the chunk reruns idempotently (sink writes go to per-chunk
      subdirectories, overwrite mode).
-  3. resume = anti-join of planned vs manifest — restart-safe.
+  3. resume = ``pending_chunks``: a Python list filter keeping the planned
+     chunks that have no manifest entry — restart-safe.
 """
 
 from __future__ import annotations
@@ -27,11 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MANIFEST_DIR = "_manifest"
-
-
-def hash_chunk_col(n_chunks: int) -> F.Column:
-    """Stable hash chunking for inputs without a partition column."""
-    return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_chunks)).cast("int")
 
 
 def manifest_path(checkpoint_dir: str) -> str:

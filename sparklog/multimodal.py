@@ -1,22 +1,21 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: real codecs over binary columns.
 
-The pages table carries ``html BINARY`` (stand-in for image/audio/video
-payloads). Decode status, honestly delineated:
+Binary payloads travel as ``BINARY`` columns through mapInPandas. What
+decodes, honestly delineated:
 
-  - AUDIO is REAL: RIFF/WAVE encode+decode via the stdlib ``wave``
+  - AUDIO: RIFF/WAVE PCM16 encode+decode via the stdlib ``wave``
     module + numpy (synth_wav / decode_binary / audio_features),
-    end-to-end tested and driver-verified.
-  - IMAGE is REAL for the codec-free formats: binary netpbm (P5 gray /
-    P6 RGB) and uncompressed 24-bit BI_RGB BMP decode from scratch with
-    numpy (decode_image), with a real nearest-neighbor resize +
-    re-encode kernel (resize_image) and real feature extraction
-    (image_features), driver-verified (image_meta oracle row).
-  - JPEG/PNG images and ALL video remain STUBBED
-    (NotImplementedError / deterministic fakes): those containers need
-    external codecs (libjpeg/ffmpeg) absent from this environment.
+    driver-verified (audio_meta oracle row).
+  - IMAGE: binary netpbm (P5 gray / P6 RGB) decodes from scratch with
+    numpy (decode_image), with a nearest-neighbor resize + re-encode
+    kernel (resize_image) and feature extraction (image_features),
+    driver-verified (image_meta oracle row).
+  - Every other format (JPEG/PNG/BMP images, all video) raises
+    NotImplementedError: entropy-coded containers need an external
+    codec (libjpeg/ffmpeg), and no synth path here produces the rest.
 
-The Spark-side plumbing is real throughout: schema, Arrow batch shape
-(mapInPandas over binary columns), and partition-stable determinism.
+Payloads are pure functions of doc_id, so every operator is
+partition-stable.
 """
 
 from __future__ import annotations
@@ -28,29 +27,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-META_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("byte_len", T.LongType()),
-    T.StructField("magic", T.StringType()),
-    T.StructField("content_hash", T.LongType()),
-    # stub "decoded" features — deterministic fakes keyed on content
-    T.StructField("fake_width", T.IntegerType()),
-    T.StructField("fake_height", T.IntegerType()),
-])
-
-_FNV_OFFSET = 0xCBF29CE484222325
-_FNV_PRIME = 0x100000001B3
-
-
-def _fnv1a_bytes(b: bytes) -> int:
-    h = _FNV_OFFSET
-    for x in b:
-        h = ((h ^ x) * _FNV_PRIME) & 0xFFFFFFFFFFFFFFFF
-    return h
-
 
 WAV_RATE = 16000
 WAV_AMPLITUDE = 0.5
@@ -77,10 +54,10 @@ def synth_wav(doc_id: int, rate: int = WAV_RATE) -> bytes:
 def decode_binary(payload: bytes) -> tuple[np.ndarray, int]:
     """REAL decode for audio: RIFF/WAVE -> (float32 mono samples in
     [-1, 1], sample_rate), via the stdlib ``wave`` module + numpy — no
-    external codec needed. Image/video formats still raise: PIL/ffmpeg
-    are not in this container; at deployment those branches are the only
-    code to add (the mapInPandas batching, schema, and partitioning
-    around this function are production-shaped)."""
+    external codec needed. Image/video formats raise: they need an
+    external codec (PIL/ffmpeg), and those branches are the only code to
+    add (the mapInPandas batching, schema, and partitioning around this
+    function are production-shaped)."""
     if payload and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         with wave.open(io.BytesIO(payload), "rb") as w:
             rate = w.getframerate()
@@ -94,14 +71,14 @@ def decode_binary(payload: bytes) -> tuple[np.ndarray, int]:
             x = x.reshape(-1, nch).mean(axis=1)
         return x, rate
     raise NotImplementedError(
-        "compressed image / video decode requires a codec not present "
-        "in this container (libjpeg/ffmpeg); WAV audio and netpbm/BMP "
-        "images decode for real (see decode_image)"
+        "compressed image / video decode requires an external codec "
+        "(libjpeg/ffmpeg); WAV audio and netpbm P5/P6 images decode for "
+        "real (see decode_image)"
     )
 
 
 # --------------------------------------------------------------------------
-# REAL image codecs (no external library): binary netpbm + 24-bit BMP
+# REAL image codec (no external library): binary netpbm
 # --------------------------------------------------------------------------
 
 
@@ -111,24 +88,6 @@ def encode_ppm(arr: np.ndarray) -> bytes:
     if c != 3 or arr.dtype != np.uint8:
         raise ValueError("encode_ppm expects (H, W, 3) uint8")
     return f"P6\n{w} {h}\n255\n".encode("ascii") + arr.tobytes()
-
-
-def encode_bmp(arr: np.ndarray) -> bytes:
-    """(H, W, 3) uint8 RGB -> uncompressed 24-bit BI_RGB BMP (bottom-up
-    rows, 4-byte-aligned stride, BGR byte order — the on-disk format)."""
-    import struct
-
-    h, w, c = arr.shape
-    if c != 3 or arr.dtype != np.uint8:
-        raise ValueError("encode_bmp expects (H, W, 3) uint8")
-    stride = (w * 3 + 3) // 4 * 4
-    raster = np.zeros((h, stride), dtype=np.uint8)
-    raster[:, : w * 3] = arr[::-1, :, ::-1].reshape(h, w * 3)  # flip + BGR
-    pix = raster.tobytes()
-    header = struct.pack("<2sIHHI", b"BM", 54 + len(pix), 0, 0, 54)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pix),
-                      2835, 2835, 0, 0)
-    return header + dib + pix
 
 
 def _decode_netpbm(b: bytes) -> np.ndarray:
@@ -162,46 +121,18 @@ def _decode_netpbm(b: bytes) -> np.ndarray:
     return raster.reshape((h, w, 3) if ch == 3 else (h, w))
 
 
-def _decode_bmp(b: bytes) -> np.ndarray:
-    """Uncompressed 24-bit BI_RGB BMP -> (H, W, 3) uint8 RGB. Handles
-    bottom-up (positive height) and top-down (negative) row order and
-    the 4-byte row stride."""
-    import struct
-
-    off = struct.unpack_from("<I", b, 10)[0]
-    w, h_raw = struct.unpack_from("<ii", b, 18)
-    bpp = struct.unpack_from("<H", b, 28)[0]
-    comp = struct.unpack_from("<I", b, 30)[0]
-    if bpp != 24 or comp != 0:
-        raise NotImplementedError(
-            f"only uncompressed 24-bit BMP decodes (bpp={bpp}, "
-            f"compression={comp})"
-        )
-    h = abs(h_raw)
-    stride = (w * 3 + 3) // 4 * 4
-    raster = np.frombuffer(b, dtype=np.uint8, count=h * stride, offset=off)
-    rows = raster.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-    if h_raw > 0:
-        rows = rows[::-1]
-    return rows[:, :, ::-1].copy()  # BGR -> RGB
-
-
 def decode_image(payload: bytes) -> np.ndarray:
-    """REAL image decode for codec-free formats: binary netpbm (P5/P6)
-    and uncompressed 24-bit BMP -> uint8 array ((H, W) gray or
-    (H, W, 3) RGB). JPEG/PNG raise NotImplementedError — entropy-coded
-    formats need a codec library this container does not have; swapping
-    one in changes only this dispatcher, none of the Spark plumbing."""
+    """REAL image decode for binary netpbm (P5/P6) -> uint8 array
+    ((H, W) gray or (H, W, 3) RGB). Every other format raises
+    NotImplementedError; adding a codec changes only this dispatcher,
+    none of the Spark plumbing."""
     if not payload:
         raise ValueError("empty image payload")
     if payload[:2] in (b"P5", b"P6"):
         return _decode_netpbm(payload)
-    if payload[:2] == b"BM":
-        return _decode_bmp(payload)
     raise NotImplementedError(
         "image format not supported without external codecs "
-        f"(magic={payload[:4]!r}); netpbm P5/P6 and 24-bit BMP decode "
-        "for real"
+        f"(magic={payload[:4]!r}); netpbm P5/P6 decodes for real"
     )
 
 
@@ -320,7 +251,7 @@ AUDIO_SCHEMA = T.StructType([
 def audio_features(audio: DataFrame, binary_col: str = "wav") -> DataFrame:
     """Real feature extraction over decoded audio: (doc_id, byte_len,
     sample_rate, n_samples, duration, rms, peak) — the audio analog of
-    extract_meta, with an actual decoder in the loop."""
+    image_features."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -357,111 +288,3 @@ def synth_audio_df(docs: DataFrame) -> DataFrame:
         run, "doc_id LONG, wav BINARY"
     )
 
-
-def extract_meta(pages: DataFrame, binary_col: str = "html") -> DataFrame:
-    """mapInPandas over the binary column -> typed metadata rows.
-
-    Arrow hands binary columns to pandas as Python ``bytes`` objects; the
-    batch shape (one pd.DataFrame per Arrow batch) is asserted in tests.
-    content_hash is computed JVM-side (F.xxhash64 on the binary column)
-    BEFORE the Python stage — hashing is exactly the kind of per-byte
-    work that must not run in a Python loop at 100 TB; only the decode
-    stand-in (magic sniff + fake dimensions) stays in the UDF, because
-    that is the part a real codec would replace."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[binary_col]
-            out = pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "byte_len": payloads.map(lambda b: 0 if b is None else len(b)),
-                "magic": payloads.map(
-                    lambda b: "" if not b else b[:6].decode("latin-1")
-                ),
-                "content_hash": pdf["content_hash"].astype("int64"),
-            })
-            # deterministic fake decode (stands in for decode_binary)
-            out["fake_width"] = (out["content_hash"].astype("uint64") % 1920).astype(
-                "int32"
-            )
-            out["fake_height"] = (
-                out["content_hash"].astype("uint64") % 1080
-            ).astype("int32")
-            yield out
-
-    return pages.select(
-        "doc_id", binary_col,
-        F.xxhash64(F.col(binary_col)).alias("content_hash"),
-    ).mapInPandas(run, META_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("frame_idx", T.IntegerType()),
-    T.StructField("ts_sec", T.DoubleType()),
-    T.StructField("frame", T.BinaryType()),
-])
-
-
-def sample_frames(videos: DataFrame, fps: float = 1.0,
-                  binary_col: str = "html",
-                  duration_col: str | None = None) -> DataFrame:
-    """Frame sampling plumbing: ONE input row explodes into ceil(dur*fps)
-    output rows — the mapInPandas batch shape a real pyav sampler needs.
-    Fake duration = byte_len/1000 s when no duration column exists; fake
-    frames are content-hash-keyed slices (deterministic)."""
-    import math
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for _, r in pdf.iterrows():
-                b = r[binary_col] or b""
-                dur = (float(r[duration_col]) if duration_col
-                       else len(b) / 1000.0)
-                n_frames = max(1, math.ceil(dur * fps))
-                h = _fnv1a_bytes(b)
-                for k in range(n_frames):
-                    rows.append((
-                        int(r["doc_id"]), k, k / fps,
-                        f"FRAME:{k}:".encode() + h.to_bytes(8, "big"),
-                    ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "ts_sec", "frame"]
-            )
-
-    cols = ["doc_id", binary_col] + ([duration_col] if duration_col else [])
-    return videos.select(*cols).mapInPandas(run, FRAME_SCHEMA)
-
-
-EMBED_DIM = 16
-
-EMBED_SCHEMA = T.StructType([
-    T.StructField("vec_id", T.LongType()),
-    T.StructField("embedding", T.ArrayType(T.FloatType())),
-])
-
-
-def embed_binary(pages: DataFrame, binary_col: str = "html",
-                 dim: int = EMBED_DIM) -> DataFrame:
-    """Feature-extraction plumbing: binary payload -> array<float> embedding
-    (vec_id, embedding), directly consumable by sparklog.ann. The encoder
-    is the stub (a real CLIP/wav2vec call goes in the inner loop); fake
-    features are seeded from the content hash so identical payloads embed
-    identically — which makes ann.embedding_neardup find exact dups."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[binary_col]
-            embs = []
-            for b in payloads:
-                rng = np.random.RandomState(
-                    _fnv1a_bytes(b or b"") & 0x7FFFFFFF
-                )
-                embs.append(rng.standard_normal(dim).astype("float32"))
-            yield pd.DataFrame({
-                "vec_id": pdf["doc_id"].astype("int64"),
-                "embedding": embs,
-            })
-
-    return pages.select("doc_id", binary_col).mapInPandas(run, EMBED_SCHEMA)

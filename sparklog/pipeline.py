@@ -43,11 +43,6 @@ def sd_value(col: str, sd_id: str, param: str) -> F.Column:
     return F.col(col).getItem(sd_id).getItem(param)
 
 
-def sd_len(col: str = "sd") -> F.Column:
-    """Count of distinct SD-IDs (StructuredData::len, message.rs:136-143)."""
-    return F.size(F.col(col))
-
-
 def enrich(parsed: DataFrame, spark: SparkSession,
            with_lang: bool = True) -> DataFrame:
     """Enum-dim enrichment as PURE PROJECTIONS: the facility/severity/

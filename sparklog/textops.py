@@ -340,7 +340,7 @@ def capped_sample(df: DataFrame, caps: DataFrame, part_col: str,
     )
 
 
-def pack_assign(docs: DataFrame, budget: int = 512, n_buckets: int = 16,
+def pack_assign(docs: DataFrame, budget: int = 512,
                 text_col: str = "text",
                 group_cols: list[str] | None = None) -> DataFrame:
     """Deterministic token-budget pack assignment: every doc gets a
@@ -352,25 +352,18 @@ def pack_assign(docs: DataFrame, budget: int = 512, n_buckets: int = 16,
     group gets its own cum_tokens/pack_id sequence, so a trainer reading
     one split sees gap-free pack ids whose token totals meet the budget
     — pack ids never span groups. The offsets side grows to
-    n_groups * n_buckets rows, still broadcast-tiny.
+    n_groups * 16 rows, still broadcast-tiny.
 
     A naive global ``SUM() OVER (ORDER BY ...)`` is a single-task sort.
     Distributed prefix-sum instead: the order key's FIRST hex nibble is
     a range-aligned bucket (global md5 order == (bucket, rest) order),
     so (1) each bucket computes its local running sum in its own window
-    partition, (2) the per-bucket totals (n_buckets rows) get exclusive
-    prefix offsets on the driver-side tiny frame, (3) one broadcast join
-    adds the offset back. n_buckets=16 uses the first nibble; 256 would
-    use two hex chars (parameterized the same way at larger scale).
+    partition, (2) the 16 per-bucket totals get exclusive prefix offsets
+    on the driver-side tiny frame, (3) one broadcast join adds the
+    offset back.
     md5 is uniform, so buckets are balanced by construction — no hot
     window. All integer arithmetic: the DuckDB oracle's global window
     reproduces it bit-for-bit."""
-    if n_buckets == 16:
-        nib = 1
-    elif n_buckets == 256:
-        nib = 2
-    else:
-        raise ValueError("n_buckets must be 16 or 256 (hex-aligned)")
     from pyspark.sql import Window
 
     gc = list(group_cols or [])
@@ -381,9 +374,9 @@ def pack_assign(docs: DataFrame, budget: int = 512, n_buckets: int = 16,
         F.size(F.filter(F.split(F.col(text_col), " "),
                         lambda x: x != "")).cast("long").alias("n_tokens"),
         key.alias("_k"),
-    ).withColumn("_b", F.substring("_k", 1, nib))
+    ).withColumn("_b", F.substring("_k", 1, 1))
     # classic two-pass prefix sum: pass 1 is AGG-ONLY (per-bucket token
-    # sums, partial map-side combine -> n_buckets rows, no sort, no
+    # sums, partial map-side combine -> 16 rows, no sort, no
     # window) — only pass 2 pays the per-bucket sort+window. Computing
     # the totals as max(_local_cum) of the windowed frame instead would
     # re-sort and re-window the whole corpus a second time (the plan
@@ -410,7 +403,7 @@ def pack_assign(docs: DataFrame, budget: int = 512, n_buckets: int = 16,
     )
 
 
-def pack_texts(docs: DataFrame, budget: int = 512, n_buckets: int = 16,
+def pack_texts(docs: DataFrame, budget: int = 512,
                text_col: str = "text",
                group_cols: list[str] | None = None,
                sep: str = "\n\n") -> DataFrame:
@@ -426,8 +419,8 @@ def pack_texts(docs: DataFrame, budget: int = 512, n_buckets: int = 16,
 
     Output: (group_cols..., pack_id, n_docs, n_tokens, pack_text)."""
     gc = list(group_cols or [])
-    asg = pack_assign(docs, budget=budget, n_buckets=n_buckets,
-                      text_col=text_col, group_cols=group_cols)
+    asg = pack_assign(docs, budget=budget, text_col=text_col,
+                      group_cols=group_cols)
     j = asg.join(docs.select("doc_id", text_col), "doc_id").withColumn(
         "_k", F.md5(F.col("doc_id").cast("string"))
     )

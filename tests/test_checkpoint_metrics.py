@@ -85,14 +85,6 @@ def test_run_pipeline_resume(tmp_path):
     assert all("partitions" in e for e in done.values())
 
 
-def test_hash_chunking_is_partition_stable(spark):
-    """Hash-chunk assignment depends only on doc_id, never on partitioning."""
-    lines = synth.lines_df(spark, SF_SMOKE).withColumn("c", CK.hash_chunk_col(8))
-    a = {r["doc_id"]: r["c"] for r in lines.repartition(2).collect()}
-    b = {r["doc_id"]: r["c"] for r in lines.repartition(16).collect()}
-    assert a == b
-
-
 def test_build_corpus_job_end_to_end(tmp_path):
     """The corpus-build CLI wires clean -> split -> decontam + LM gates
     -> balance -> per-split pack -> partitioned lake; stats line must be
