@@ -73,9 +73,9 @@ def enrich(parsed: DataFrame, spark: SparkSession,
     return out
 
 
-def hour_epoch(ts_col: str = "timestamp") -> F.Column:
+def hour_epoch() -> F.Column:
     """Hour bucket as unix seconds (null timestamp -> null bucket)."""
-    c = F.col(ts_col)
+    c = F.col("timestamp")
     return (c - c % 3600).alias("hour_epoch")
 
 
@@ -87,11 +87,11 @@ def hourly_agg(enriched: DataFrame) -> DataFrame:
     )
 
 
-def salted(df: DataFrame, key: str, num_partitions: int | None = None,
-           salt_col: str = "doc_id") -> DataFrame:
+def salted(df: DataFrame, key: str,
+           num_partitions: int | None = None) -> DataFrame:
     """Salted repartition for skewed keys (north rule D6): the hot 40%
     hostname spreads over SALT_BUCKETS partitions instead of one."""
-    salt = F.pmod(F.xxhash64(F.col(salt_col)), F.lit(SALT_BUCKETS))
+    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(SALT_BUCKETS))
     if num_partitions:
         return df.repartition(num_partitions, F.col(key), salt)
     return df.repartition(F.col(key), salt)
@@ -101,8 +101,7 @@ SESSION_GAP_SECONDS = 1800
 
 
 def sessionize_batch(parsed: DataFrame,
-                     gap_seconds: int = SESSION_GAP_SECONDS,
-                     bucket_seconds: int = 86400) -> DataFrame:
+                     gap_seconds: int = SESSION_GAP_SECONDS) -> DataFrame:
     """Batch sessionization as a custom grouped operator (applyInPandas):
     event streams split on gaps > gap_seconds. The streaming path
     (streaming.sessionize_stream_native) shares the semantics; the DuckDB
@@ -133,7 +132,7 @@ def sessionize_batch(parsed: DataFrame,
         })
 
     events = _session_events(parsed).withColumn(
-        "_bkt", (F.col("timestamp") / bucket_seconds).cast("long")
+        "_bkt", (F.col("timestamp") / 86400).cast("long")
     )
     sess1 = events.groupBy("hostname", "_bkt").applyInPandas(
         fn,

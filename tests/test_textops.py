@@ -339,11 +339,13 @@ def test_split_assign_deterministic_and_reasonable(spark, toy_docs):
 
 def test_components_property_vs_union_find(spark):
     """Property check for the iterative label-propagation core: on random
-    graphs (incl. chains longer than one hop) the Spark result must equal
-    a reference union-find, for several seeded shapes."""
+    graphs (incl. chains longer than one hop, and no edges at all, which
+    runs the placeholder self-pair) the Spark result must equal a
+    reference union-find, for several seeded shapes; the one canonical
+    doc per component is its min."""
     import random
 
-    for seed, n, m in ((1, 60, 40), (2, 80, 15), (3, 50, 80)):
+    for seed, n, m in ((1, 60, 40), (2, 80, 15), (3, 50, 80), (4, 5, 0)):
         rng = random.Random(seed)
         pairs = sorted({tuple(sorted(rng.sample(range(n), 2)))
                         for _ in range(m)})
@@ -365,9 +367,11 @@ def test_components_property_vs_union_find(spark):
 
         nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id LONG")
         pdf = spark.createDataFrame(pairs or [(0, 0)], "doc_a LONG, doc_b LONG")
-        got = {r["doc_id"]: r["component_id"]
-               for r in TX.components_from_pairs(nodes, pdf).collect()}
+        out = TX.components_from_pairs(nodes, pdf).collect()
+        got = {r["doc_id"]: r["component_id"] for r in out}
         assert got == want, f"seed={seed}"
+        assert all(r["is_canonical"] == (r["doc_id"] == r["component_id"])
+                   for r in out), f"seed={seed}"
 
 
 def test_pii_scrub_known_values(spark):
@@ -850,73 +854,6 @@ def test_pack_assign_group_cols_equals_per_group_runs(spark):
         assert packs[0] == 0 and packs == list(range(len(packs)))
 
 
-def test_components_star_equals_hashmin_on_random_graphs(spark):
-    """algorithm='star' (large-star/small-star) must produce exactly the
-    hash-min labeling on random graphs — chains, forests, dense blobs —
-    including full output parity (component ids AND is_canonical)."""
-    import random
-
-    for seed, n, m in ((11, 60, 40), (12, 80, 15), (13, 50, 80)):
-        rng = random.Random(seed)
-        pairs = sorted({tuple(sorted(rng.sample(range(n), 2)))
-                        for _ in range(m)})
-        nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id LONG")
-        pdf = spark.createDataFrame(pairs or [(0, 0)],
-                                    "doc_a LONG, doc_b LONG")
-        hm = {tuple(r) for r in
-              TX.components_from_pairs(nodes, pdf).collect()}
-        st = {tuple(r) for r in
-              TX.components_from_pairs(nodes, pdf,
-                                       algorithm="star").collect()}
-        assert st == hm, f"seed={seed}"
-
-
-def test_components_star_giant_chain_logarithmic_rounds(spark):
-    """The star algorithm's O(log n) bound: a 60-hop chain (the shape
-    that forces hash-min WITH pointer jumping to ~log2 rounds too) must
-    close within 8 alternating rounds, and an unreachable budget must
-    RAISE, never silently split."""
-    import pytest
-
-    n = 60
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id LONG")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a LONG, doc_b LONG"
-    )
-    out = TX.components_from_pairs(nodes, pairs, max_iters=8,
-                                   algorithm="star").collect()
-    assert {r["component_id"] for r in out} == {0}
-    assert sum(r["is_canonical"] for r in out) == 1
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        TX.components_from_pairs(nodes, pairs, max_iters=1,
-                                 algorithm="star").collect()
-    with pytest.raises(ValueError, match="unknown components algorithm"):
-        TX.components_from_pairs(nodes, pairs, algorithm="bogus")
-
-
-def test_components_star_singletons_and_empty_graph(spark):
-    """No edges at all (the placeholder self-pair) -> every node its own
-    canonical component, zero rounds."""
-    nodes = spark.createDataFrame([(i,) for i in range(5)], "doc_id LONG")
-    pairs = spark.createDataFrame([(0, 0)], "doc_a LONG, doc_b LONG")
-    out = TX.components_from_pairs(nodes, pairs, algorithm="star").collect()
-    assert all(r["component_id"] == r["doc_id"] for r in out)
-    assert all(r["is_canonical"] == 1 for r in out)
-
-
-def test_neardup_components_star_matches_default_on_corpus(spark):
-    """The driver's neardup_components row runs hash-min; the star
-    backend must produce the identical labeling over the same real
-    minhash near-dup graph (the oracle-gated corpus at smoke scale)."""
-    from sparklog import synth
-
-    docs = synth.load_documents(spark, "/root/testdata/sf0.001")
-    hm = {tuple(r) for r in TX.neardup_components(docs).collect()}
-    st = {tuple(r)
-          for r in TX.neardup_components(docs, algorithm="star").collect()}
-    assert st == hm and len(hm) > 0
-
-
 def test_line_filter_known_values(spark):
     """Each C4 line gate on hand-built lines: min-words, terminal
     punctuation, banned phrases; counts reconcile; map-only JVM plan."""
@@ -1256,3 +1193,24 @@ def test_materialized_filter_keeps_caller_keep_column(spark):
     odd = TX.materialized_filter(df, F.col("doc_id") % 2 == 1)
     assert odd.columns == df.columns
     assert sorted(r["doc_id"] for r in odd.collect()) == list(range(1, 12, 2))
+
+
+def test_minhash_and_shingle_barriers_evaluate_once(spark):
+    """Plan pin for the two batch barriers that carry the same conjunct:
+    the final executed plan of minhash_neardup holds the Jaccard
+    intersect once and shingle_sets' shingle expression once (its ASCII
+    and non-ASCII transform branches). With a plain filter in place of
+    materialized_filter each count doubles (2 and 4)."""
+    from sparklog.synth import load_documents
+
+    docs = load_documents(spark, SF_SMOKE)
+
+    def final_plan(df):
+        df.collect()
+        return (df._jdf.queryExecution().executedPlan().toString()
+                .split("== Initial Plan ==")[0])
+
+    mh = final_plan(TX.minhash_neardup(docs))
+    assert mh.count("array_intersect") == 1, mh
+    sh = final_plan(TX.shingle_sets(docs))
+    assert sh.count("transform(") == 2, sh
