@@ -633,7 +633,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sqrt(n) centroid count) plus clustered-corpus recall tests in
 # tests/test_textops.py, where real cluster structure gives recall 1.0 at
 # a ~12% probe fraction.
-LSH_GATE = dict(n_bits=3, n_tables=8, multiprobe=1)
+LSH_GATE = dict(n_bits=3, n_tables=8)
 IVF_GATE = dict(n_centroids=8, n_probe=7)
 
 

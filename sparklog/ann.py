@@ -1,16 +1,19 @@
 """Similarity search over an embedding column (array<float>).
 
-Two strategies:
+Three top-k strategies, one exact re-rank (_top_k) behind all of them:
   - brute_force_topk: exact cosine top-k. The query set is broadcast
     (small), the corpus side streams — one scan, no corpus shuffle; the
     per-query top-k is a windowed rank over (n_queries x corpus) rows.
     This is the correctness baseline and is fine whenever
     n_queries x corpus fits a shuffle (it's the corpus that is 100 TB,
     so n_queries must stay small — which is the point of the baseline).
-  - lsh_topk: random-hyperplane LSH bucketing — the scale path. Each
-    vector gets a B-bit signature from deterministic hyperplanes; queries
-    probe only their own bucket (plus Hamming-1 neighbors), so the join
-    touches ~corpus/2^B per query instead of the whole corpus.
+  - ivf_topk: inverted lists over deterministic hash-sampled centers;
+    each query scores only the lists of its n_probe nearest centers.
+  - lsh_topk: random-hyperplane LSH bucketing. Each vector gets a B-bit
+    signature per table from deterministic hyperplanes; queries probe
+    their own bucket plus its Hamming-1 neighbors, so the join touches
+    ~corpus/2^B per probe instead of the whole corpus.
+embedding_neardup pairs vectors through textops.band_pairs.
 
 Dot products use JVM ``zip_with``/``aggregate`` (no Python in the hot path).
 """
@@ -22,39 +25,33 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# scale defaults (overridable per call): the LSH bit width is DERIVED, not
-# hard-coded — see _auto_bits. The r2 review flagged fixed 4-bit tables as a
-# small-corpus recall crutch (them probing ~37% of the corpus per query);
-# the auto rule keeps the probed fraction bounded at any corpus size.
+# the LSH bit width is DERIVED from these, not hard-coded: see _auto_bits
 LSH_TABLES = 4
 LSH_TARGET_FRACTION = 0.02   # max expected fraction of corpus probed/query
 LSH_MAX_BUCKET_ROWS = 4096   # bucket granularity floor at huge n
+NEARDUP_BITS = 4
+NEARDUP_TABLES = 6
 
 
-def _auto_bits(n: int, n_tables: int, multiprobe: int,
-               target_fraction: float = LSH_TARGET_FRACTION,
-               max_bucket_rows: int = LSH_MAX_BUCKET_ROWS) -> int:
+def _auto_bits(n: int, n_tables: int) -> int:
     """Signature width for sign-LSH, derived from corpus size and a probed-
     fraction budget (never a fixed constant).
 
     Two lower bounds, take the max:
       - fraction bound: expected probed fraction per query is
-        n_tables * probes_per_table / 2^bits (uniform-bucket model, and
-        probes_per_table = 1 + n_bits for Hamming-1 multiprobe); choose the
-        smallest width that keeps it <= target_fraction. This bounds the
-        candidate-join cost at ANY corpus size.
-      - bucket bound: bits >= log2(n / max_bucket_rows), so a single bucket
-        never holds more than ~max_bucket_rows rows at huge n (keeps the
-        per-bucket self-join from re-growing quadratically at 100 TB).
+        n_tables * (1 + bits) / 2^bits (uniform-bucket model; each table
+        probes the query's bucket and its bits Hamming-1 neighbors);
+        choose the smallest width that keeps it <= LSH_TARGET_FRACTION.
+        This bounds the candidate-join cost at ANY corpus size.
+      - bucket bound: bits >= log2(n / LSH_MAX_BUCKET_ROWS), so a single
+        bucket never holds more than ~LSH_MAX_BUCKET_ROWS rows at huge n
+        (keeps the per-bucket join from re-growing quadratically).
     Capped at 24 bits (16M buckets — plenty for 10^9+ rows)."""
     b = 2
-    while b < 24:
-        probes = (1 + b) if multiprobe else 1
-        if n_tables * probes / (1 << b) <= target_fraction:
-            break
+    while b < 24 and n_tables * (1 + b) / (1 << b) > LSH_TARGET_FRACTION:
         b += 1
-    if n > max_bucket_rows:
-        b = max(b, math.ceil(math.log2(n / max_bucket_rows)))
+    if n > LSH_MAX_BUCKET_ROWS:
+        b = max(b, math.ceil(math.log2(n / LSH_MAX_BUCKET_ROWS)))
     return min(b, 24)
 
 
@@ -71,6 +68,24 @@ def _norm(a: str) -> F.Column:
             f"aggregate({a}, CAST(0 AS DOUBLE),"
             " (acc, v) -> acc + CAST(v AS DOUBLE) * v)"
         )
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Exact re-rank of (query_id, neighbor_id, cos_sim) candidates: the k
+    best per query, ties broken by neighbor_id. Output: (query_id,
+    neighbor_id, rank, cos_sim)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", "neighbor_id", F.col("rank").cast("int"),
+            F.round("cos_sim", 6).alias("cos_sim"),
+        )
+        .orderBy("query_id", "rank")
     )
 
 
@@ -96,19 +111,7 @@ def brute_force_topk(emb: DataFrame, n_queries: int = 8, k: int = 5) -> DataFram
     )
     joined = corpus.join(F.broadcast(queries), F.col("neighbor_id") != F.col("query_id"))
     sim = (_dot("_qe", "_ce") / (F.col("_qn") * F.col("_cn"))).alias("cos_sim")
-    scored = joined.select("query_id", "neighbor_id", sim)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.col("rank").cast("int"),
-            F.round("cos_sim", 6).alias("cos_sim"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(joined.select("query_id", "neighbor_id", sim), k)
 
 
 def _bucket_col(vec_col: str, n_bits: int, table: int) -> F.Column:
@@ -131,49 +134,22 @@ def _bucket_col(vec_col: str, n_bits: int, table: int) -> F.Column:
     return sig.cast("int")
 
 
-def lsh_buckets(emb: DataFrame, n_bits: int = 4, n_tables: int = 6,
-                vec_col: str = "embedding") -> DataFrame:
-    """Multi-table LSH: one (table_id, bucket) row per table per vector.
-    More tables trade candidate volume for recall — the standard knob when
-    the corpus is high-entropy (near-random embeddings bucket poorly in a
-    single table)."""
-    from sparklog.textops import spread
+def embedding_neardup(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs: candidates share a bucket in
+    one of NEARDUP_TABLES sign-LSH tables (textops.band_pairs, an
+    equi-join, no crossJoin), verified by exact cosine >= threshold."""
+    from sparklog.textops import band_pairs, spread
 
-    emb = spread(emb)
-    tables = F.array(*[
-        F.struct(
-            F.lit(t).alias("table_id"),
-            _bucket_col(vec_col, n_bits, table=t).alias("bucket"),
-        )
-        for t in range(n_tables)
-    ])
-    return emb.select("*", F.explode(tables).alias("_t")).select(
-        *emb.columns, "_t.table_id", "_t.bucket"
-    )
-
-
-def embedding_neardup(emb: DataFrame, threshold: float = 0.95,
-                      n_bits: int = 4, n_tables: int = 6) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: candidates from shared LSH
-    buckets (equi-join, no crossJoin), verified by exact cosine ≥ threshold."""
-    sigs = lsh_buckets(emb, n_bits, n_tables)
-    l = sigs.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("_ea"),
-        _norm("embedding").alias("_na"), "table_id", "bucket",
-    )
-    r = sigs.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("_eb"),
-        _norm("embedding").alias("_nb"),
-        F.col("table_id").alias("_t2"), F.col("bucket").alias("_b2"),
-    )
-    pairs = l.join(
-        r,
-        (F.col("table_id") == F.col("_t2")) & (F.col("bucket") == F.col("_b2"))
-        & (F.col("vec_a") < F.col("vec_b")),
-    ).dropDuplicates(["vec_a", "vec_b"])
-    sim = _dot("_ea", "_eb") / (F.col("_na") * F.col("_nb"))
+    rows = spread(emb).select(
+        "vec_id", "embedding", _norm("embedding").alias("norm"))
+    keys = [_bucket_col("embedding", NEARDUP_BITS, table=t)
+            for t in range(NEARDUP_TABLES)]
+    pairs = band_pairs(rows, "vec_id", keys, carry=("embedding", "norm"))
+    sim = _dot("embedding_a", "embedding_b") / (
+        F.col("norm_a") * F.col("norm_b"))
     return (
-        pairs.select("vec_a", "vec_b", F.round(sim, 6).alias("cos_sim"))
+        pairs.select(F.col("a").alias("vec_a"), F.col("b").alias("vec_b"),
+                     F.round(sim, 6).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
         .orderBy("vec_a", "vec_b")
     )
@@ -276,71 +252,60 @@ def ivf_topk(emb: DataFrame, n_queries: int = 8, k: int = 5,
         & (F.col("vec_id") != F.col("query_id")),
     )
     sim = (_dot("_qe", "embedding") / (F.col("_qn") * F.col("_n"))).alias("cos_sim")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        joined.select("query_id", F.col("vec_id").alias("neighbor_id"), sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.col("rank").cast("int"),
-            F.round("cos_sim", 6).alias("cos_sim"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(joined.select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), sim), k)
 
 
 def lsh_topk(emb: DataFrame, n_queries: int = 8, k: int = 5,
-             n_bits: int | None = None, n_tables: int = LSH_TABLES,
-             multiprobe: int = 1) -> DataFrame:
+             n_bits: int | None = None,
+             n_tables: int = LSH_TABLES) -> DataFrame:
     """Approximate top-k: candidates limited to vectors sharing an LSH
-    bucket with the query (equi-join on (table_id, bucket) — the scale
+    bucket with the query (equi-join on (band_id, band_key) — the scale
     path: the join touches a bounded fraction of the corpus per query
     instead of all of it).
 
     - n_bits=None derives the signature width from the corpus size and a
       probed-fraction budget (_auto_bits) — one count() of the corpus, the
       only full-scan metadata this needs.
-    - multiprobe=1 additionally probes every Hamming-1 neighbor of the
-      query's bucket (the standard multiprobe trick: recall of ~2x the
-      tables at the cost of n_bits extra PROBES, not extra corpus rows —
-      only the tiny query side explodes).
+    - Each query also probes every Hamming-1 neighbor of its bucket, the
+      standard multiprobe trick: recall of ~2x the tables at the cost of
+      n_bits extra PROBES, not extra corpus rows — only the tiny query
+      side explodes.
     The gate registration in __spark_entry__.py pins small-corpus params
     tuned so recall is exactly 1.0 at sf0.01, which makes the driver's
     exact-top-k DuckDB oracle applicable verbatim."""
-    joined = _lsh_join(emb, n_queries, n_bits, n_tables, multiprobe)
+    joined = _lsh_join(emb, n_queries, n_bits, n_tables)
     sim = (_dot("_qe", "_ce") / (F.col("_qn") * F.col("_cn"))).alias("cos_sim")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        joined.select("query_id", "neighbor_id", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.col("rank").cast("int"),
-            F.round("cos_sim", 6).alias("cos_sim"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(joined.select("query_id", "neighbor_id", sim), k)
 
 
 def _lsh_join(emb: DataFrame, n_queries: int, n_bits: int | None,
-              n_tables: int, multiprobe: int) -> DataFrame:
+              n_tables: int) -> DataFrame:
     """Candidate generation for lsh_topk: deduped (query, neighbor) pairs
     sharing a probed bucket, carrying the payload columns the scorer
     needs. Factored out so tests can measure the candidate fraction the
     probe parameters actually touch."""
+    from sparklog.textops import banded, spread
+
     if n_bits is None:
-        n_bits = _auto_bits(emb.count(), n_tables, multiprobe)
-    sigs = lsh_buckets(emb, n_bits, n_tables)
+        n_bits = _auto_bits(emb.count(), n_tables)
+    sigs = banded(
+        spread(emb).select(
+            "vec_id", "embedding", _norm("embedding").alias("norm")),
+        [_bucket_col("embedding", n_bits, table=t) for t in range(n_tables)],
+        ["vec_id", "embedding", "norm"],
+    )
     corpus = sigs.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("_ce"),
-        _norm("embedding").alias("_cn"),
-        "table_id", "bucket",
+        F.col("norm").alias("_cn"),
+        "band_id", "band_key",
     )
+    # the QUERY side explodes into the probe set: own bucket + every
+    # Hamming-1 neighbor (n_bits + 1 probes per table per query)
+    probe = F.explode(F.array(F.col("band_key"), *[
+        F.col("band_key").bitwiseXOR(F.lit(1 << b)) for b in range(n_bits)
+    ]))
     queries = (
         sigs.join(
             F.broadcast(
@@ -351,24 +316,15 @@ def _lsh_join(emb: DataFrame, n_queries: int, n_bits: int | None,
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("_qe"),
-            _norm("embedding").alias("_qn"),
-            F.col("table_id").alias("_qt"),
-            F.col("bucket").alias("_qb"),
+            F.col("norm").alias("_qn"),
+            F.col("band_id").alias("_qt"),
+            probe.alias("_qb"),
         )
     )
-    if multiprobe:
-        # explode the QUERY side into the probe set: own bucket + every
-        # Hamming-1 neighbor (n_bits + 1 probes per table per query)
-        probe = F.explode(
-            F.array(F.col("_qb"), *[
-                F.col("_qb").bitwiseXOR(F.lit(1 << b)) for b in range(n_bits)
-            ])
-        )
-        queries = queries.withColumn("_qb", probe)
     return corpus.join(
         F.broadcast(queries),
-        (F.col("table_id") == F.col("_qt"))
-        & (F.col("bucket") == F.col("_qb"))
+        (F.col("band_id") == F.col("_qt"))
+        & (F.col("band_key") == F.col("_qb"))
         & (F.col("neighbor_id") != F.col("query_id")),
     ).dropDuplicates(["query_id", "neighbor_id"])
 

@@ -1213,26 +1213,25 @@ _MH_A = [(0x9E3779B9 * (j + 1) + 0x7F4A7C15) % (_MH_P - 1) + 1
 _MH_B = [(0xC2B2AE3D ^ (j * 0x165667B1)) % _MH_P for j in range(MINHASH_PERMS)]
 
 
-def shingle_sets(docs: DataFrame, text_col: str = "text",
-                 k: int = 5) -> DataFrame:
-    """(doc_id, _sh) — distinct k-shingle sets; empty-set docs dropped.
-    materialized_filter: a plain filter(size(_sh) > 0) is pushed below
-    the projection and re-generates the whole shingle array just for
-    the size check (2x shingle work per row)."""
+def shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, _sh) — distinct 5-shingle sets of ``text``; empty-set docs
+    dropped. materialized_filter: a plain filter(size(_sh) > 0) is pushed
+    below the projection and re-generates the whole shingle array just
+    for the size check (2x shingle work per row)."""
     return materialized_filter(
-        spread(docs).select("doc_id", _shingles(text_col, k).alias("_sh")),
+        spread(docs).select("doc_id", _shingles().alias("_sh")),
         F.size("_sh") > 0,
     )
 
 
-def minhash_signature(docs: DataFrame | None = None, text_col: str = "text",
-                      *, sh: DataFrame | None = None) -> DataFrame:
+def minhash_signature(docs: DataFrame | None = None, *,
+                      sh: DataFrame | None = None) -> DataFrame:
     """doc_id + minhash signature (array of MINHASH_PERMS longs), all JVM:
     sig[j] = min over shingles of ((a_j * x + b_j) mod p), x = h mod p.
     Pass a precomputed ``sh`` (from shingle_sets) to avoid re-planning
     and re-spreading the source."""
     if sh is None:
-        sh = shingle_sets(docs, text_col)
+        sh = shingle_sets(docs)
     hashed = sh.withColumn(
         "_h", F.expr(f"transform(_sh, s -> pmod(xxhash64(s), {_MH_P}L))")
     )
@@ -1250,12 +1249,49 @@ def minhash_signature(docs: DataFrame | None = None, text_col: str = "text",
     return hashed.select("doc_id", sig.alias("sig"))
 
 
+def banded(rows: DataFrame, keys: list[F.Column],
+           keep: list[str]) -> DataFrame:
+    """The LSH banding format: one (keep..., band_id, band_key) row per
+    band, band_id = the index of its key in ``keys``."""
+    band = F.explode(F.array(*[
+        F.struct(F.lit(b).alias("band_id"), key.alias("band_key"))
+        for b, key in enumerate(keys)
+    ])).alias("_band")
+    return rows.select(*keep, band).select(*keep, "_band.*")
+
+
+def band_pairs(rows: DataFrame, id_col: str, keys: list[F.Column],
+               carry: tuple[str, ...] = ()) -> DataFrame:
+    """The LSH band join: rows sharing a (band_id, band_key) pair up by an
+    equi-join (no crossJoin), a < b, deduplicated across bands. Output:
+    (a, b, <carry>_a..., <carry>_b...). Band rows hold the id, keys and
+    ``carry`` only, so the band-key shuffle moves nothing else. The join
+    emits ~sum over keys of c_k^2 / 2 rows (c_k = rows sharing key k)."""
+    bands = banded(rows, keys, [id_col, *carry])
+    l, r = bands.alias("l"), bands.alias("r")
+    return (
+        l.join(
+            r,
+            (F.col("l.band_id") == F.col("r.band_id"))
+            & (F.col("l.band_key") == F.col("r.band_key"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("a"),
+            F.col(f"r.{id_col}").alias("b"),
+            *[F.col(f"l.{c}").alias(f"{c}_a") for c in carry],
+            *[F.col(f"r.{c}").alias(f"{c}_b") for c in carry],
+        )
+        .dropDuplicates(["a", "b"])
+    )
+
+
 def minhash_neardup(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
     """LSH candidate generation + exact shingle-Jaccard verification.
 
     Scale shape: band rows are (doc_id, band_id, band_key) ONLY — 24 bytes,
     never the shingle payload — so the band-key shuffle moves keys, not
-    text. Same-bucket docs pair up (no crossJoin); the deduped candidate
+    text. Same-bucket docs pair up in band_pairs; the deduped candidate
     pairs then re-join the shingle sets BY doc_id (a shuffle proportional
     to candidates, not corpus x bands) for exact Jaccard verification.
     At sf0.01 the verified pair set equals the exhaustive all-pairs
@@ -1265,42 +1301,12 @@ def minhash_neardup(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
     rows_per_band = MINHASH_PERMS // LSH_BANDS
     sh = shingle_sets(docs)
     sigs = minhash_signature(sh=sh)
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            *[
-                                F.col("sig")[i]
-                                for i in range(
-                                    b * rows_per_band, (b + 1) * rows_per_band
-                                )
-                            ]
-                        ).alias("band_key"),
-                    )
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-    left = bands.alias("l")
-    right = bands.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    keys = [
+        F.xxhash64(*[F.col("sig")[i] for i in range(
+            b * rows_per_band, (b + 1) * rows_per_band)])
+        for b in range(LSH_BANDS)
+    ]
+    cand = band_pairs(sigs, "doc_id", keys).toDF("doc_a", "doc_b")
     # shuffle_hash: sort-merge would SORT rows carrying ~KB shingle arrays
     # (measured 4x slower); hash join just shuffles them once. At 100 TB
     # the shingle side is far bigger than the candidate side, so building
@@ -1325,8 +1331,7 @@ def minhash_neardup(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
     ).orderBy("doc_a", "doc_b")
 
 
-def neardup_components(docs: DataFrame, threshold: float = 0.6,
-                       max_iters: int = 10) -> DataFrame:
+def neardup_components(docs: DataFrame) -> DataFrame:
     """Duplicate-cluster resolution: connected components over the
     minhash near-dup pair graph — the step that turns pairwise matches
     into keep/drop decisions (one canonical doc per cluster).
@@ -1336,18 +1341,19 @@ def neardup_components(docs: DataFrame, threshold: float = 0.6,
     each round every node takes the min of its own and its neighbors'
     labels, then the label of that label; converged when nothing
     changes. Near-dup graphs are unions of small dense clusters, so
-    rounds ~ log of cluster diameter (1-2 in practice); max_iters bounds
-    adversarial chains. Each round is one equi-join + groupBy on the EDGE
-    list (proportional to near-dup pairs, not the corpus) plus two joins
-    on the node-sized labels table; the labels are localCheckpoint()ed
-    once per round so the plan stays flat and the convergence count
-    reads the materialized result.
+    rounds ~ log of cluster diameter (1-2 in practice); the 10-round
+    bound of components_from_pairs covers adversarial chains. Each round
+    is one equi-join + groupBy on the EDGE list (proportional to near-dup
+    pairs, not the corpus) plus two joins on the node-sized labels
+    table; the labels are localCheckpoint()ed once per round so the plan
+    stays flat and the convergence count reads the materialized result.
 
     Output: (doc_id, component_id = min doc_id in the component,
-    is_canonical) for EVERY doc — singletons are their own component.
+    is_canonical) for EVERY doc — singletons are their own component;
+    pairs are minhash_neardup's at its default Jaccard threshold 0.6.
     """
-    pairs = minhash_neardup(docs, threshold).select("doc_a", "doc_b")
-    return components_from_pairs(docs.select("doc_id"), pairs, max_iters)
+    pairs = minhash_neardup(docs).select("doc_a", "doc_b")
+    return components_from_pairs(docs.select("doc_id"), pairs)
 
 
 def components_from_pairs(nodes: DataFrame, pairs: DataFrame,
@@ -1427,11 +1433,11 @@ def components_from_pairs(nodes: DataFrame, pairs: DataFrame,
     ).orderBy("doc_id")
 
 
-def ngram_jaccard(docs: DataFrame, k: int = 5) -> DataFrame:
-    """Exact k-gram Jaccard for consecutive-doc_id pairs (the deterministic
+def ngram_jaccard(docs: DataFrame) -> DataFrame:
+    """Exact 5-gram Jaccard for consecutive-doc_id pairs (the deterministic
     verification kernel the LSH pipelines reuse; standalone here so the
     oracle can check it end-to-end with DuckDB list functions)."""
-    sh = spread(docs).select("doc_id", _shingles("text", k).alias("_s"))
+    sh = spread(docs).select("doc_id", _shingles().alias("_s"))
     a, b = sh.alias("a"), sh.alias("b")
     pairs = a.join(b, F.col("b.doc_id") == F.col("a.doc_id") + 1)
     inter = F.size(F.array_intersect("a._s", "b._s")).cast("double")
@@ -1490,55 +1496,28 @@ def _simhash_expr(col: str) -> str:
     )
 
 
-def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     return spread(docs).select(
-        "doc_id", F.expr(_simhash_expr(text_col)).alias("simhash")
+        "doc_id", F.expr(_simhash_expr("text")).alias("simhash")
     )
 
 
 def simhash_neardup(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Hamming-≤3 pairs via 4x16-bit chunk banding (pigeonhole: any pair
-    within distance 3 shares at least one exact chunk), then exact
-    popcount verification — same one-shuffle shape as MinHash LSH. Band
+    within distance 3 shares at least one exact chunk) in the same
+    band_pairs as MinHash LSH, then exact popcount verification. Band
     rows carry only (doc_id, simhash, chunk) — no text payload."""
-    sigs = simhash(docs)
     chunk_bits = 16  # 4 disjoint chunks cover all 62 bits (last is 14 wide)
-    chunks = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        F.shiftrightunsigned(F.col("simhash"), chunk_bits * c)
-                        .bitwiseAND(F.lit((1 << chunk_bits) - 1))
-                        .alias("chunk_val"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("ch"),
-    ).select("doc_id", "simhash", "ch.chunk_id", "ch.chunk_val")
-    l, r = chunks.alias("l"), chunks.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.chunk_id") == F.col("r.chunk_id"))
-            & (F.col("l.chunk_val") == F.col("r.chunk_val"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.col("l.simhash").alias("_ha"),
-            F.col("r.simhash").alias("_hb"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    hamming = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
+    keys = [
+        F.shiftrightunsigned(F.col("simhash"), chunk_bits * c)
+        .bitwiseAND(F.lit((1 << chunk_bits) - 1))
+        for c in range(4)
+    ]
+    pairs = band_pairs(simhash(docs), "doc_id", keys, carry=("simhash",))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        pairs.select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
+        pairs.select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"),
+                     hamming.cast("int").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .orderBy("doc_a", "doc_b")
     )

@@ -131,8 +131,9 @@ def _clustered_emb(spark, n=400, n_clusters=8, dim=32, noise=0.05):
 def test_ann_scale_paths_prune_hard_on_clustered_data(spark):
     """On clustered data both scale paths reach recall 1.0 while probing a
     small fraction: IVF probes 2/16 lists (12.5%); LSH uses 6-bit tables
-    (multiprobe fraction = 4*(6+1)/64 = 44% worst-case, far less realized
-    because same-cluster vectors share signatures)."""
+    (each table probes the query's bucket and its 6 Hamming-1 neighbors:
+    4*(6+1)/64 = 44% worst-case, far less realized because same-cluster
+    vectors share signatures)."""
     emb = _clustered_emb(spark)
     exact = {(r["query_id"], r["neighbor_id"])
              for r in ANN.brute_force_topk(emb, n_queries=6, k=5).collect()}
@@ -141,7 +142,7 @@ def test_ann_scale_paths_prune_hard_on_clustered_data(spark):
                                  n_probe=2).collect()}
     lsh = {(r["query_id"], r["neighbor_id"])
            for r in ANN.lsh_topk(emb, n_queries=6, k=5, n_bits=6,
-                                 n_tables=4, multiprobe=1).collect()}
+                                 n_tables=4).collect()}
     assert len(exact & ivf) / len(exact) == 1.0
     assert len(exact & lsh) / len(exact) == 1.0
 
@@ -151,12 +152,12 @@ def test_lsh_auto_bits_bounds_candidate_fraction():
     under budget at EVERY corpus size (r2 critique: fixed 4-bit tables
     probed ~37% of the corpus per query)."""
     for n in (1_000, 1_000_000, 1_000_000_000):
-        b = ANN._auto_bits(n, ANN.LSH_TABLES, multiprobe=1)
+        b = ANN._auto_bits(n, ANN.LSH_TABLES)
         frac = ANN.LSH_TABLES * (b + 1) / (1 << b)
         assert frac <= ANN.LSH_TARGET_FRACTION, (n, b, frac)
     # bucket-granularity bound kicks in at huge n
-    assert ANN._auto_bits(10**9, 4, 1) >= 17  # 1e9/4096 -> >=2^17 buckets
-    assert ANN._auto_bits(10**9, 4, 1) <= 24
+    assert ANN._auto_bits(10**9, 4) >= 17  # 1e9/4096 -> >=2^17 buckets
+    assert ANN._auto_bits(10**9, 4) <= 24
 
 
 def test_lsh_measured_candidate_fraction_at_bench_sf(spark):
@@ -167,17 +168,34 @@ def test_lsh_measured_candidate_fraction_at_bench_sf(spark):
     n = emb.count()
     n_q = 8
     cand = ANN._lsh_join(emb, n_queries=n_q, n_bits=None,
-                         n_tables=ANN.LSH_TABLES, multiprobe=1).count()
+                         n_tables=ANN.LSH_TABLES).count()
     frac = cand / (n_q * n)
     assert frac <= 0.05, f"candidate fraction {frac:.3f} exceeds 5%"
 
 
 def test_minhash_lsh_one_shuffle_shape(spark, toy_docs):
-    """Plan audit: candidate generation must be an equi-join on band keys
-    (shuffled hash join / SMJ on band_key), never a cartesian product."""
-    plan = TX.minhash_neardup(toy_docs)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    """Plan audit: candidate generation in every band_pairs caller must be
+    an equi-join on band keys (shuffled hash join / SMJ on band_key),
+    never a cartesian product."""
+    for df in (TX.minhash_neardup(toy_docs), TX.simhash_neardup(toy_docs),
+               ANN.embedding_neardup(_clustered_emb(spark, n=40))):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_dup_passages_and_line_dedup_one_shuffled_hash_join(spark):
+    """Plan pin for the shuffle_hash hints: before execution, the plans
+    of dup_passages and line_dedup each hold exactly one
+    ShuffledHashJoin (the membership join back onto the per-key table).
+    Without the hint the planner broadcasts that table at sf0.01 and the
+    count is 0."""
+    from sparklog.synth import load_documents
+
+    docs = load_documents(spark, SF_CORRECT)
+    for df in (TX.dup_passages(docs), TX.line_dedup(docs)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ShuffledHashJoin") == 1, plan
 
 
 def test_simhash_fingerprint_plans_are_jvm_only(spark, toy_docs):
