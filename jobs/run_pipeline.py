@@ -12,8 +12,11 @@ days on resume).
 
 Per chunk (SURVEY.md §2D): pruned scan -> synth -> tag lineage -> parse
 (vectorized UDF) -> enrich (join-free projections) -> salted route write
-(per-severity sinks + rejects) -> hourly agg -> metrics -> ATOMIC manifest
-commit. Re-running after a crash processes only pending days.
+(per-severity sinks + rejects) -> hourly agg -> lineage record -> ATOMIC
+manifest commit. The lineage record (per-partition counters and content
+fingerprints) is one groupBy; the chunk's totals and fingerprint are sums
+of its collected rows. Re-running after a crash processes only pending
+days.
 """
 
 from __future__ import annotations
@@ -72,9 +75,9 @@ def main() -> None:
         chunk_lines = synth.lines_from_docs(day_pages, corrupt=args.corrupt)
         # lineage tagging fused into the parse pass: ONE Python crossing
         parsed = parse_df(chunk_lines, tag_lineage=True)
-        # ONE parse per chunk: route_write, hourly_agg, partition_metrics
-        # and the content fingerprint all consume the same persisted frame
-        # (previously each re-executed synth -> parse, i.e. 4x the work)
+        # ONE parse per chunk: route_write, hourly_agg and partition_metrics
+        # all consume the same persisted frame (uncached, each would
+        # re-execute synth -> parse)
         enriched = PL.enrich(parsed, spark, with_lang=False).persist()
         try:
             sink_dir = os.path.join(args.output, f"chunk={day}")
@@ -84,9 +87,10 @@ def main() -> None:
             agg.write.mode("overwrite").parquet(
                 os.path.join(args.output, f"agg/chunk={day}")
             )
-            metrics_rows = [
-                r.asDict() for r in M.partition_metrics(enriched).collect()
-            ]
+            metrics_rows = sorted(
+                (r.asDict() for r in M.partition_metrics(enriched).collect()),
+                key=lambda r: r["partition_id"],
+            )
 
             rows_in = sum(r["rows_in"] for r in metrics_rows)
             rows_ok = sum(r["rows_ok"] for r in metrics_rows)
@@ -100,7 +104,7 @@ def main() -> None:
                 "rows_ok": rows_ok,
                 "rows_rejected": rows_rej,
                 "sink_counts": counts,
-                "fingerprint": CK.content_fingerprint(enriched),
+                "fingerprint": sum(r["fingerprint"] for r in metrics_rows),
                 "partitions": metrics_rows,
                 "wall_sec": round(time.perf_counter() - t0, 3),
             })

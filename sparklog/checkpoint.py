@@ -11,7 +11,11 @@ Protocol:
      rows_rejected, per-partition lineage, content fingerprint) is written
      ATOMICALLY (tmp file + rename) — a crash mid-chunk leaves no entry, so
      the chunk reruns idempotently (sink writes go to per-chunk
-     subdirectories, overwrite mode).
+     subdirectories, overwrite mode). The counters, the lineage and the
+     fingerprint all come from one aggregation
+     (``metrics.partition_metrics``, which folds ``content_fingerprint``
+     per partition); the chunk fingerprint is the sum of the
+     per-partition ones.
   3. resume = ``pending_chunks``: a Python list filter keeping the planned
      chunks that have no manifest entry — restart-safe.
 """
@@ -23,7 +27,6 @@ import os
 import re
 import tempfile
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MANIFEST_DIR = "_manifest"
@@ -74,14 +77,13 @@ def pending_chunks(checkpoint_dir: str, planned) -> list:
     return [c for c in planned if str(c) not in done]
 
 
-def content_fingerprint(df: DataFrame) -> int:
-    """Order-independent content hash of a chunk's parsed output: sum of
-    per-row xxhash64 folded to 31 bits (keeps the ANSI-mode long sum safe
-    for up to 2^32 rows per chunk)."""
+def content_fingerprint() -> F.Column:
+    """The content fingerprint aggregate: an order-independent hash of
+    parsed rows, the sum of per-row xxhash64(doc_id, parse_error) folded
+    to 31 bits (keeps the ANSI-mode long sum safe for up to 2^32 rows per
+    chunk). A sum, so per-partition fingerprints add up to the chunk's:
+    ``metrics.partition_metrics`` evaluates it in the lineage groupBy."""
     row_hash = F.xxhash64(
         F.col("doc_id"), F.coalesce(F.col("parse_error"), F.lit(""))
     )
-    r = df.select(
-        F.sum(F.pmod(row_hash, F.lit(2147483647))).alias("fp")
-    ).collect()[0]
-    return int(r["fp"] or 0)
+    return F.sum(F.pmod(row_hash, F.lit(2147483647)))

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparklog.parse import parse_lines
-from sparklog.schema import PARSED_SCHEMA
+from sparklog.schema import ERR_UNICODE, PARSED_SCHEMA
 
 
 @F.pandas_udf(PARSED_SCHEMA)
@@ -46,6 +46,12 @@ def parse_df(df: DataFrame, line_col: str = "line",
     would be PARSED TWICE. mapInPandas is a pushdown barrier, so the parse
     runs exactly once per row (plan-audited in tests: one ArrowEvalPython /
     MapInPandas node even with filters on parse_error downstream).
+
+    The line crosses into Python as BINARY and is decoded per row, the
+    reference's decode-then-parse order (lib.rs:18-24): text sources keep
+    raw bytes, and a line that is not valid UTF-8 becomes one reject row
+    (parse_error = UnicodeError) instead of failing the batch's Arrow
+    conversion. bytes_in is the raw byte length.
     """
     from pyspark.sql import types as T
 
@@ -63,14 +69,34 @@ def parse_df(df: DataFrame, line_col: str = "line",
 
         pid = TaskContext.get().partitionId() if tag_lineage else None
         for pdf in batches:
-            parsed = parse_lines(pdf[line_col])
+            raw = pdf[line_col].tolist()
+            lines, bad = _decode(raw)
+            parsed = parse_lines(pd.Series(lines, dtype="object"))
+            if bad:
+                parsed.loc[bad, "parse_error"] = ERR_UNICODE
             base = pdf[passthrough].reset_index(drop=True)
             if tag_lineage:
                 base["partition_id"] = pid
-                base["bytes_in"] = [
-                    len(s.encode("utf-8")) if isinstance(s, str) else 0
-                    for s in pdf[line_col]
-                ]
+                base["bytes_in"] = [0 if b is None else len(b) for b in raw]
             yield pd.concat([base, parsed], axis=1)
 
-    return df.mapInPandas(run, schema)
+    binary = df.withColumn(line_col, F.col(line_col).cast("binary"))
+    return binary.mapInPandas(run, schema)
+
+
+def _decode(raw: list) -> tuple[list, list[int]]:
+    """UTF-8 decode a batch of raw lines: (lines, indexes of the lines
+    that are not valid UTF-8). Nulls stay None; an invalid line becomes
+    None too, so its parse row is all-null like every reject."""
+    try:
+        return [None if b is None else b.decode() for b in raw], []
+    except UnicodeDecodeError:
+        pass
+    lines, bad = [], []
+    for i, b in enumerate(raw):
+        try:
+            lines.append(None if b is None else b.decode())
+        except UnicodeDecodeError:
+            lines.append(None)
+            bad.append(i)
+    return lines, bad

@@ -46,6 +46,32 @@ def test_route_write_and_equality(spark, parsed, tmp_path):
         assert want.exceptAll(sink_rows).count() == 0
 
 
+def test_route_write_one_salted_exchange(spark, parsed, tmp_path,
+                                         monkeypatch):
+    """The frame route_write writes has exactly one Exchange above the
+    cache: hashpartitioning on (sink, salt). The frame is captured by
+    wrapping PL.salted, the last step before the write."""
+    import re
+
+    written = []
+    orig = PL.salted
+
+    def salted(df, *args, **kwargs):
+        written.append(orig(df, *args, **kwargs))
+        return written[-1]
+
+    monkeypatch.setattr(PL, "salted", salted)
+    enriched = PL.enrich(parsed, spark, with_lang=False)
+    PL.route_write(enriched, str(tmp_path / "sinks"))
+    assert len(written) == 1
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    above_cache = plan.split("InMemoryTableScan")[0]
+    salt = (r"Exchange hashpartitioning\(sink#\d+, "
+            r"pmod\(xxhash64\(doc_id#\d+L, 42\), 16\), \d+\)")
+    assert len(re.findall(salt, above_cache)) == 1, above_cache
+    assert above_cache.count("Exchange") == 1, above_cache
+
+
 def test_hourly_agg_conservation(spark, parsed):
     agg = PL.hourly_agg(PL.enrich(parsed, spark))
     total = agg.agg(F.sum("n")).collect()[0][0]
